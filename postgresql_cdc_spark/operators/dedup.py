@@ -154,22 +154,6 @@ def minhash_signature(text: Column, k: int = BANDS * ROWS_PER_BAND,
     )
 
 
-def band_keys(sig: Column, bands: int = BANDS,
-              rows: int = ROWS_PER_BAND) -> Column:
-    """LSH band buckets: array of (band_id, band_hash) structs. Two docs are
-    candidates iff they collide on any band (all `rows` minhashes equal)."""
-    return F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            h60(F.concat_ws(",", *[
-                F.element_at(sig, b * rows + r + 1).cast("string")
-                for r in range(rows)
-            ])).alias("bucket"),
-        )
-        for b in range(bands)
-    ])
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -660,116 +644,6 @@ def _shingle_pair_counts(
     ).agg(F.count(F.lit(1)).alias("n_common"))
 
 
-def _ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    ngram: int,
-    max_df: int,
-) -> DataFrame:
-    """Prefix-filtered exact n-gram Jaccard (Chaudhuri et al. ICDE'06 /
-    Vernica et al. SIGMOD'10): identical output to the posting-self-join
-    formulation, but the pair-generating join runs on each doc's PREFIX —
-    the first ``|A| - ceil(t*|A|) + 1`` shingles in a canonical global
-    order — instead of the full posting list. Two docs with Jaccard >= t
-    MUST share a prefix shingle (if their prefixes were disjoint, the
-    optimal alignment still leaves fewer than t·|union| common elements),
-    so recall is exact; verification recomputes the true Jaccard via
-    ``array_intersect`` on the full (stop-shingle-pruned) arrays.
-
-    Semantics preserved exactly:
-
-    - ``max_df`` (stop-shingle) df is computed over the FULL posting list,
-      as before, and hot shingles are removed from the arrays before both
-      prefix selection and verification — so ``n_common`` counts the same
-      non-hot intersections the posting join counted;
-    - ``na``/``nb`` are the FULL shingle-set sizes (prune and Jaccard
-      denominators unchanged). Since |A_clean| <= |A|, the true Jaccard is
-      <= the cleaned-arrays Jaccard, so prefixing on the cleaned arrays at
-      threshold t never drops a qualifying pair;
-    - the prefix length uses the same ``threshold - 1e-6`` epsilon as the
-      size-ratio prune (covers the caller's round-half-up at 6 decimals):
-      a longer prefix only ADDS candidates, never loses one.
-
-    Scale shape: the posting self-join's per-shingle fan-out is df², summed
-    over every shingle; the prefix join's is df_prefix² — at threshold 0.5
-    each doc contributes roughly half its shingles, quartering the expected
-    pair fan-out, with the gap widening as corpora (and bucket widths)
-    grow. The extra cost is one collect_list shuffle to rebuild cleaned
-    arrays, which is O(corpus) and scale-linear.
-    """
-    eps = threshold - 1e-6
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(shingles(tokens(F.col(text_col)), ngram), h60).alias("shh"),
-    ).persist()
-    base = hashed.where(F.size("shh") > 0)
-    posting = base.select(
-        "id",
-        F.size("shh").alias("n_sh"),
-        F.explode("shh").alias("sh_hash"),
-    )
-    hot = posting.groupBy("sh_hash").count().where(F.col("count") > max_df)
-    pruned = posting.join(F.broadcast(hot), "sh_hash", "left_anti")
-
-    # cleaned arrays, canonically ordered (plain value order — cheap and
-    # engine-neutral), carrying the FULL size for prune + denominator;
-    # persisted: read by the prefix explode and both verification sides
-    clean = (
-        pruned.groupBy("id", "n_sh")
-        .agg(F.array_sort(F.collect_list("sh_hash")).alias("shh_c"))
-        .persist()
-    )
-    prefix_len = (
-        F.size("shh_c")
-        - F.ceil(F.lit(eps) * F.size("shh_c")).cast("int")
-        + F.lit(1)
-    )
-    pref = clean.select(
-        "id", "n_sh",
-        F.explode(F.slice("shh_c", F.lit(1), prefix_len)).alias("sh_hash"),
-    )
-    pa, pb = pref.alias("pa"), pref.alias("pb")
-    cand = (
-        pa.join(pb, "sh_hash")
-        .where(F.col("pa.id") < F.col("pb.id"))
-        .where(
-            F.least(F.col("pa.n_sh"), F.col("pb.n_sh"))
-            >= eps * F.greatest(F.col("pa.n_sh"), F.col("pb.n_sh"))
-        )
-        .select(
-            F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"),
-            F.col("pa.n_sh").alias("na"), F.col("pb.n_sh").alias("nb"),
-        )
-        .distinct()
-    )
-    ca, cb = clean.alias("ca"), clean.alias("cb")
-    common = (
-        cand.join(ca, cand.id_a == F.col("ca.id"))
-        .join(cb, cand.id_b == F.col("cb.id"))
-        .select(
-            "id_a", "id_b", "na", "nb",
-            F.size(F.array_intersect(F.col("ca.shh_c"), F.col("cb.shh_c")))
-            .alias("n_common"),
-        )
-        # the posting join produced no row for a pair with zero common
-        # non-hot shingles; keep that contract
-        .where(F.col("n_common") > 0)
-    )
-    return (
-        common.select(
-            "id_a", "id_b",
-            F.round(
-                F.col("n_common")
-                / (F.col("na") + F.col("nb") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -777,7 +651,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     ngram: int = 3,
     max_df: int = 100,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard above threshold.
 
@@ -799,16 +672,7 @@ def ngram_jaccard_pairs(
     - the sizes ride through the ``groupBy`` (keys are functionally dependent
       on the ids), so the two post-aggregation size joins disappear — one
       shuffle instead of three.
-
-    ``prefix_filter=True`` (r18) switches the candidate generation to the
-    prefix-filtered formulation (:func:`_ngram_jaccard_pairs_prefix`) —
-    identical output, pair join bounded by prefix postings instead of the
-    full posting list; see that function for the measured tradeoff.
     """
-    if prefix_filter:
-        return _ngram_jaccard_pairs_prefix(
-            df, text_col, id_col, threshold, ngram, max_df
-        )
     common = _shingle_pair_counts(
         df, text_col, id_col, ngram, max_df, size_ratio_min=threshold
     )

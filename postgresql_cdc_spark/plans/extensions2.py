@@ -1112,13 +1112,14 @@ _STREAM_INCR_ORACLE = f"""
         "either way).",
 )
 def cdc_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from postgresql_cdc_spark.operators import dedup as dd
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
 
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
     waves = [d.where(F.col("doc_id") % 3 == k) for k in range(3)]
@@ -1129,19 +1130,8 @@ def cdc_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_sincr_{uuid.uuid4().hex[:12]}_")
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    # one file per wave, mtimes strictly increasing: FileStreamSource takes
-    # oldest-first, so wave order == ingest order deterministically
-    t0 = 1_600_000_000
-    for k, w in enumerate(waves):
-        tmp = os.path.join(base, f"w{k}")
-        w.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    base = _gate_dir("sincr")
+    stream = _file_waves(spark, base, waves, "doc_id long, text string")
 
     idx = {
         p: os.path.join(base, "index", p)
@@ -1191,20 +1181,7 @@ def cdc_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_overwrite(bi.postings, idx["postings"], ep)
         sp.catalog.clearCache()  # per the dedup.py persist contract
 
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("incremental-dedup ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, stream, base, ingest, timeout_s=300)
     if not os.path.isdir(matches_dir):
         return spark.createDataFrame(
             [], "batch_id long, corpus_id long, jaccard double"

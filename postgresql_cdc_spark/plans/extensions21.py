@@ -667,12 +667,12 @@ def _admission_oracle() -> str:
         "shingle docs never collide and are admitted by both engines.",
 )
 def cdc_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import tempfile
-    import uuid
-
     from postgresql_cdc_spark.operators import dedup as dd
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
 
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
     waves = [d.where(F.col("doc_id") % 3 == k) for k in range(3)]
@@ -683,17 +683,8 @@ def cdc_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_adm_{uuid.uuid4().hex[:12]}_")
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    t0 = 1_600_000_000
-    for k, w in enumerate(waves):
-        tmp = os.path.join(base, f"w{k}")
-        w.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    base = _gate_dir("adm")
+    stream = _file_waves(spark, base, waves, "doc_id long, text string")
 
     idx = {
         p: os.path.join(base, "index", p)
@@ -754,20 +745,7 @@ def cdc_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_overwrite(bi.postings, idx["postings"], ep)
         sp.catalog.clearCache()  # per the dedup.py persist contract
 
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("dedup-admission ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, stream, base, ingest, timeout_s=300)
     return spark.read.parquet(ledger_dir).select(
         "id",
         F.col("ingest_epoch").cast("int").alias("wave"),

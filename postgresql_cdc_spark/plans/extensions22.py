@@ -469,12 +469,12 @@ def _vector_index_oracle() -> str:
         "must both be invisible to the serve path.",
 )
 def cdc_stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import tempfile
-    import uuid
-
     from postgresql_cdc_spark.operators import similarity as sim
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
     from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
     from postgresql_cdc_spark.streaming.epoch_maintenance import (
         compact_epochs,
@@ -483,17 +483,11 @@ def cdc_stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_vidx_{uuid.uuid4().hex[:12]}_")
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    t0 = 1_600_000_000
-    for k in range(3):
-        tmp = os.path.join(base, f"w{k}")
-        e.where(F.col("vec_id") % 3 == k).coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    base = _gate_dir("vidx")
+    waves = _file_waves(
+        spark, base, [e.where(F.col("vec_id") % 3 == k) for k in range(3)],
+        "vec_id long, embedding array<float>",
+    )
 
     # offline-trained quantizer, frozen before the stream starts (a store
     # trains its index parameters offline; maintenance only encodes)
@@ -510,20 +504,7 @@ def cdc_stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("cell", "neighbor_id", F.col("embedding").alias("nvec"))
         epoch_overwrite(assigned, postings, int(epoch))
 
-    q = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("vector-index ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, waves, base, ingest, timeout_s=300)
 
     # compact the committed epochs below the newest into the base partition
     # (postings fold by concatenation — the identity merge), then serve
@@ -708,14 +689,12 @@ def _chunk_compaction_oracle() -> str:
         "archive_bytes / target_chunk_bytes.",
 )
 def cdc_stream_chunk_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from postgresql_cdc_spark.functions.pg_types import typed_view
     from postgresql_cdc_spark.operators.materialize import materialize
     from postgresql_cdc_spark.plans.streaming_gate import (
         _archive_frames,
-        _run_stream_to_memory,
+        _gate_dir,
+        _run_stream,
     )
     from postgresql_cdc_spark.streaming.archive_maintenance import (
         compact_wal_archive,
@@ -725,7 +704,7 @@ def cdc_stream_chunk_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_wal_archive,
     )
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_cmp_{uuid.uuid4().hex[:12]}_")
+    base = _gate_dir("cmp")
     arch = os.path.join(base, "wal")
     frames = _archive_frames()
     per = (len(frames) + 9) // 10
@@ -745,7 +724,7 @@ def cdc_stream_chunk_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = compact_wal_archive(arch, target_chunk_bytes=(big // 2) + 1)
     assert stats["merged_runs"] >= 1 and stats["chunks_after"] <= 4, stats
 
-    log = _run_stream_to_memory(spark, arch, base)
+    log = _run_stream(spark, arch, base)
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state, {"id": "bigint", "v_int": "int", "v_text": "string"}, keep=()
@@ -783,11 +762,11 @@ def cdc_stream_chunk_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Waves are one file per trigger, mtime-ordered under AvailableNow.",
 )
 def cdc_stream_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import tempfile
-    import uuid
-
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
     from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
     from postgresql_cdc_spark.streaming.epoch_maintenance import (
         compact_epochs,
@@ -796,18 +775,11 @@ def cdc_stream_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_bm25_{uuid.uuid4().hex[:12]}_")
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    t0 = 1_600_000_000
-    for k in range(3):
-        tmp = os.path.join(base, f"w{k}")
-        d.where(F.col("doc_id") % 3 == k).coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
-
+    base = _gate_dir("bm25")
+    waves = _file_waves(
+        spark, base, [d.where(F.col("doc_id") % 3 == k) for k in range(3)],
+        "doc_id long, text string",
+    )
     stats_dir = os.path.join(base, "stats")
 
     def ingest(batch: DataFrame, epoch: int) -> None:
@@ -826,20 +798,7 @@ def cdc_stream_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         epoch_overwrite(partial, stats_dir, int(epoch))
 
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("bm25-stats ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, waves, base, ingest, timeout_s=300)
 
     def _sum_merge(df: DataFrame) -> DataFrame:
         return df.agg(

@@ -120,12 +120,12 @@ nq AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM qr),
         "O(corpus^2).",
 )
 def cdc_stream_ivf_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import tempfile
-    import uuid
-
     from postgresql_cdc_spark.operators import similarity as sim
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
     from postgresql_cdc_spark.streaming.epoch_io import (
         epoch_overwrite,
         epochs_before,
@@ -133,17 +133,12 @@ def cdc_stream_ivf_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_drift_{uuid.uuid4().hex[:12]}_")
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    t0 = 1_600_000_000
-    for k in range(_N_EPOCHS):
-        tmp = os.path.join(base, f"w{k}")
-        e.where(F.col("vec_id") % 3 == k).coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    base = _gate_dir("drift")
+    waves = _file_waves(
+        spark, base,
+        [e.where(F.col("vec_id") % 3 == k) for k in range(_N_EPOCHS)],
+        "vec_id long, embedding array<float>",
+    )
 
     # frozen offline quantizer + maintained postings: the exact
     # cdc_stream_vector_index maintenance pipe
@@ -160,20 +155,7 @@ def cdc_stream_ivf_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("cell", "neighbor_id", F.col("embedding").alias("nvec"))
         epoch_overwrite(assigned, postings, int(epoch))
 
-    q = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("recall-drift ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, waves, base, ingest, timeout_s=300)
 
     cents = spark.read.parquet(cents_path)
     queries = e.where(

@@ -276,11 +276,13 @@ SELECT * FROM row1 UNION ALL SELECT * FROM row2
 def cdc_stream_ivf_quantizer_refresh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
     import shutil
-    import tempfile
-    import uuid
 
+    from postgresql_cdc_spark.plans.streaming_gate import (
+        _file_waves,
+        _gate_dir,
+        _run_stream,
+    )
     from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
     from postgresql_cdc_spark.streaming.epoch_maintenance import (
         compact_epochs,
@@ -298,18 +300,13 @@ def cdc_stream_ivf_quantizer_refresh(
     # new run starts — its returned DataFrame has been collected by then
     if LAST_STATE_DIR is not None:
         shutil.rmtree(LAST_STATE_DIR, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_qref_{uuid.uuid4().hex[:12]}_")
+    base = _gate_dir("qref")
     LAST_STATE_DIR = base
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    t0 = 1_600_000_000
-    for k in range(3):
-        tmp = os.path.join(base, f"w{k}")
-        corpus.where(F.col("vec_id") % 3 == k).coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"wave{k}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    waves = _file_waves(
+        spark, base,
+        [corpus.where(F.col("vec_id") % 3 == k) for k in range(3)],
+        "vec_id long, embedding array<float>",
+    )
 
     # generation 1: trained offline on wave 0 ONLY (the pre-drift world),
     # persisted as the versioned quantizer's first generation
@@ -326,20 +323,7 @@ def cdc_stream_ivf_quantizer_refresh(
         ).select("cell", "neighbor_id", F.col("embedding").alias("nvec"))
         epoch_overwrite(assigned, postings, int(epoch))
 
-    q = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("quantizer-refresh ingest did not finish")
-    finally:
-        q.stop()
+    _run_stream(spark, waves, base, ingest, timeout_s=300)
 
     # gen-1 health over the maintained store, as recorded at ingest.
     # Materialized EAGERLY (one row): the re-encode below folds + sweeps

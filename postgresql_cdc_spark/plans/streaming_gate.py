@@ -11,6 +11,21 @@ event, the hash mismatches.
 This is the reference's whole reason to exist (WAL → decoded rows → current
 state, `CdcEngine.java` + `IntegrationTest.java`) exercised end-to-end under
 the driver's correctness gate, not just in unit tests.
+
+Every streaming gate here (and the parquet-wave ingests in the
+``extensions*`` modules) runs through one small harness, so a gate body
+keeps only what differs: its frames, its view spec, its per-batch kernel
+call and its serve projection.
+
+- :func:`_run_stream` starts, drains and stops a stream: ``pgcdc`` at a
+  ``maxRecordsPerBatch`` (default trigger, :func:`_drain_bounded`) or
+  ``readall`` (``Trigger.AvailableNow``), or a prebuilt stream; into a
+  ``foreachBatch`` function or a memory table; checkpoint under the gate's
+  temp dir (:func:`_gate_dir`), bounded by a timeout.
+- :func:`_decode` turns one table of an envelope batch into the typed
+  change rows a view spec declares, through ``typed_view``, with names and
+  types taken from the spec's DDL; :func:`_ivm_stream` and
+  :func:`_spec_batch` wire that into the join-IVM kernel.
 """
 
 from __future__ import annotations
@@ -95,12 +110,6 @@ def _archive_frames() -> list:
     return frames
 
 
-def _build_archive(path: str) -> None:
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    write_wal_archive(path, _archive_frames())
-
-
 def _append_txn(frames: list, rows: list, lsn: int, xid: int) -> tuple[int, int]:
     """Append one BEGIN / rows / COMMIT transaction starting at ``lsn``;
     returns the next (lsn, xid). Keeps the envelope convention — begin's
@@ -163,58 +172,157 @@ def _drain_bounded(q, timeout_s: float = 180.0) -> None:
         th.join(15)
 
 
-def _sink_to_memory(spark: SparkSession, stream, base: str,
-                    available_now: bool, timeout_s: float = 180.0,
-                    output_mode: str = "append") -> DataFrame:
-    """Run an already-built streaming DataFrame into a memory sink and return
-    the sink table — the shared tail of every gate query, so sink wiring,
-    trigger policy, and the hang guard live in exactly one place.
+def _gate_dir(tag: str) -> str:
+    """A fresh temp dir for one gate run; its archive, checkpoint and state
+    all live under it."""
+    return tempfile.mkdtemp(prefix=f"pgcdc_{tag}_{uuid.uuid4().hex[:12]}_")
 
-    Both trigger modes are bounded by ``timeout_s`` via ``_drain_bounded`` /
-    ``awaitTermination``."""
-    sink = f"cdc_gate_{uuid.uuid4().hex[:12]}"
-    writer = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
+
+def _archive(base: str, frames: list, name: str = "wal") -> str:
+    """Write ``frames`` as the WAL archive ``base/name``; returns its path."""
+    from postgresql_cdc_spark.streaming.source import write_wal_archive
+
+    path = os.path.join(base, name)
+    write_wal_archive(path, frames)
+    return path
+
+
+def _pgcdc(spark: SparkSession, arch: str, max_records: int | None = None,
+           **options) -> DataFrame:
+    """``readStream.format("pgcdc")`` over an archive: txn-aligned
+    micro-batches of ``max_records`` records, or with None the whole
+    archive as one batch (``readall``)."""
+    _register_source(spark)
+    reader = spark.readStream.format("pgcdc").option("path", arch)
+    if max_records is None:
+        reader = reader.option("readall", "true")
+    else:
+        reader = reader.option("maxRecordsPerBatch", str(max_records))
+    for k, v in options.items():
+        reader = reader.option(k, str(v))
+    return reader.load()
+
+
+def _run_stream(spark: SparkSession, src, base: str, sink=None, *,
+                max_records: int | None = None, transform=None,
+                output_mode: str = "append",
+                timeout_s: float = 180.0) -> DataFrame | None:
+    """The one way a gate runs a stream: start it, drain it, stop it.
+
+    ``src`` is an archive path, read through :func:`_pgcdc` at
+    ``max_records``, or a prebuilt stream (a two-archive join, a parquet
+    file ingest); ``transform`` maps it before the sink. ``sink`` is a
+    ``foreachBatch`` function; without one the stream lands in a memory
+    table, which is returned. The checkpoint is ``base/ckpt``, so a
+    second call on the same ``base`` resumes the first.
+
+    ``max_records=None`` runs under ``Trigger.AvailableNow`` and waits
+    with ``awaitTermination``; a bound runs real micro-batches under the
+    default trigger, drained by :func:`_drain_bounded`. Both stop after
+    ``timeout_s`` with a TimeoutError, and a failed query re-raises."""
+    stream = _pgcdc(spark, src, max_records) if isinstance(src, str) else src
+    if transform is not None:
+        stream = transform(stream)
+    writer = stream.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", os.path.join(base, "ckpt")
     )
-    if available_now:
+    table = None
+    if sink is None:
+        table = f"cdc_gate_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(table)
+    else:
+        writer = writer.foreachBatch(sink)
+    if max_records is None:
         q = writer.trigger(availableNow=True).start()
         try:
             if not q.awaitTermination(timeout_s):
-                raise TimeoutError(f"streaming replay did not finish in {timeout_s}s")
+                raise TimeoutError(
+                    f"streaming replay did not finish in {timeout_s}s"
+                )
         finally:
             q.stop()
     else:
-        q = writer.start()
-        _drain_bounded(q, timeout_s)
-    return spark.table(sink)
+        _drain_bounded(writer.start(), timeout_s)
+    return None if table is None else spark.table(table)
 
 
-def _run_stream_to_memory(spark: SparkSession, arch: str, base: str,
-                          transform=None, max_records: int | None = None,
-                          options: dict | None = None) -> DataFrame:
-    """readStream(pgcdc) → optional transform → memory sink; returns the
-    sink table.
+def _file_waves(spark: SparkSession, base: str, waves: list,
+                schema: str) -> DataFrame:
+    """Write each wave DataFrame as ONE parquet file under ``base/in``
+    with strictly increasing mtimes, and return the file stream over them
+    at one file per trigger: FileStreamSource takes files oldest-first, so
+    wave order is ingest order, deterministically."""
+    import glob
+    import shutil
 
-    Default: whole archive as ONE batch under Trigger.AvailableNow (option
-    readall). With ``max_records``, the source chunks into real micro-batches
-    (txn-aligned, ``maxRecordsPerBatch``) under the default trigger —
-    required when the transform's semantics only show up ACROSS batches
-    (watermark advancement, cross-batch state)."""
-    _register_source(spark)
-    reader = spark.readStream.format("pgcdc").option("path", arch)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, str(v))
-    if max_records is None:
-        reader = reader.option("readall", "true")  # AvailableNow: one batch
-    else:
-        reader = reader.option("maxRecordsPerBatch", str(max_records))
-    stream = reader.load()
-    if transform is not None:
-        stream = transform(stream)
-    return _sink_to_memory(spark, stream, base, available_now=max_records is None)
+    indir = os.path.join(base, "in")
+    os.makedirs(indir)
+    t0 = 1_600_000_000
+    for k, w in enumerate(waves):
+        tmp = os.path.join(base, f"w{k}")
+        w.coalesce(1).write.parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dst = os.path.join(indir, f"wave{k}.parquet")
+        shutil.move(part, dst)
+        os.utime(dst, (t0 + 60 * k, t0 + 60 * k))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(indir)
+    )
+
+
+def _decode(batch_df: DataFrame, table: str, ddl: str) -> DataFrame:
+    """One table's rows of an envelope batch, typed as a view spec's DDL
+    declares them: filter ``table``, decode every payload column through
+    ``typed_view``, keep ``op``/``lsn``, and emit the DDL's column order."""
+    from pyspark.sql import functions as F
+
+    from postgresql_cdc_spark.streaming.join_ivm import ddl_fields
+
+    fields = ddl_fields(ddl)
+    typed = typed_view(
+        batch_df.where(F.col("table") == table),
+        {n: t for n, t in fields if n not in ("op", "lsn")},
+        keep=("op", "lsn"),
+    )
+    return typed.select(*[n for n, _ in fields])
+
+
+def _ivm_stream(spark: SparkSession, tag: str, frames: list,
+                ivm_batch) -> str:
+    """Stream ``frames`` in 25-record micro-batches into
+    ``ivm_batch(batch_df, batch_id, state)``, where ``state`` is an empty
+    dir under the gate's temp dir; returns ``state`` for the serve."""
+    base = _gate_dir(tag)
+    state = os.path.join(base, "state")
+    os.makedirs(state)
+    _run_stream(
+        spark, _archive(base, frames), base,
+        lambda batch_df, batch_id: ivm_batch(batch_df, batch_id, state),
+        max_records=25,
+    )
+    return state
+
+
+def _spec_batch(spec, fact_table: str, *dim_tables: str):
+    """The ``ivm_batch`` of a plain :class:`JoinViewSpec` view: decode the
+    fact table and each dim table (aligned with ``spec.dims``) by the
+    spec's own DDLs and apply the batch. Every prior-state read in
+    ``apply_batch`` resolves strictly below the batch id, so a replayed
+    batch never sees its crashed attempt's partial writes."""
+    from postgresql_cdc_spark.streaming import join_ivm
+
+    def ivm_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        join_ivm.apply_batch(
+            batch_df.sparkSession, state, batch_id,
+            [_decode(batch_df, t, d.ddl)
+             for t, d in zip(dim_tables, spec.dims)],
+            _decode(batch_df, fact_table, spec.fact_ddl),
+            spec=spec,
+        )
+
+    return ivm_batch
 
 
 @register(
@@ -233,12 +341,8 @@ def _run_stream_to_memory(spark: SparkSession, arch: str, base: str,
         "(Trigger.AvailableNow) inside the callable.",
 )
 def cdc_stream_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_gate_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-
-    log = _run_stream_to_memory(spark, arch, base)
+    base = _gate_dir("gate")
+    log = _run_stream(spark, _archive(base, _archive_frames()), base)
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state, {"id": "bigint", "v_int": "int", "v_text": "string"}, keep=()
@@ -276,30 +380,15 @@ def cdc_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from postgresql_cdc_spark.streaming.stateful import dedup_stream
 
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_dd_{run}_")
-    arch = os.path.join(base, "wal")
-
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
     frames = [(1, encode_relation(_DEDUP_REL))]
     lsn, xid = 10, 1
     for t in range(6):  # 6 txns x 10 rows; key k(i%20) repeats 3x overall
-        frames.append((lsn, encode_begin(lsn + 11, 0, xid)))
-        for k in range(10):
-            i = t * 10 + k
-            lsn += 1
-            frames.append(
-                (lsn, encode_insert(
-                    _DEDUP_REL.relation_id,
-                    [str(i), f"k{i % 20}", f"p{i % 20}"],
-                ))
+        lsn, xid = _append_txn(frames, [
+            encode_insert(
+                _DEDUP_REL.relation_id, [str(i), f"k{i % 20}", f"p{i % 20}"]
             )
-        lsn += 1
-        frames.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-        lsn += 1
-        xid += 1
-    write_wal_archive(arch, frames)
+            for i in range(t * 10, t * 10 + 10)
+        ], lsn, xid)
 
     def dedup(stream):
         keyed = stream.withColumn(
@@ -307,12 +396,59 @@ def cdc_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return dedup_stream(keyed, ["content_key"], order_col="lsn")
 
-    out = _run_stream_to_memory(spark, arch, base, transform=dedup)
+    base = _gate_dir("dd")
+    out = _run_stream(spark, _archive(base, frames), base, transform=dedup)
     return out.select(
         "content_key",
         F.element_at("columns", "id").cast("long").alias("first_id"),
         F.element_at("columns", "payload").alias("payload"),
     )
+
+
+def _evolution_frames(relation_id: int, name: str) -> tuple[list, int]:
+    """Ids 0..49 inserted under (id, v_int); then the RELATION re-sent with
+    an added ``v_note`` column (PostgreSQL re-sends RELATION on DDL) and ids
+    50..99 inserted with it. Returns the frames and the index of the
+    re-sent RELATION."""
+    cols = (ColumnMeta("id", 20, flags=1), ColumnMeta("v_int", 23))
+    rel_v1 = Relation(relation_id, "public", name, "d", cols)
+    rel_v2 = Relation(
+        relation_id, "public", name, "d", cols + (ColumnMeta("v_note", 1043),)
+    )
+    frames = [(1, encode_relation(rel_v1))]
+    lsn, _ = _append_txn(frames, [
+        encode_insert(relation_id, [str(i), str((i * 3) % 17)])
+        for i in range(50)
+    ], 10, 1)
+    ddl_at = len(frames)
+    frames.append((lsn, encode_relation(rel_v2)))
+    _append_txn(frames, [
+        encode_insert(relation_id, [str(i), str((i * 3) % 17), f"n{i}"])
+        for i in range(50, N)
+    ], lsn + 1, 2)
+    return frames, ddl_at
+
+
+def _restart_changelog(spark: SparkSession, tag: str, first: list,
+                       second: list) -> DataFrame:
+    """Ship ``first`` as archive chunk 0 and land it through one query
+    (25-record micro-batches) in an append-only parquet changelog; stop;
+    ship ``second`` as chunk 1 and run a NEW query on the SAME checkpoint,
+    which must resume past the first query's last committed offset.
+    Returns the changelog."""
+    from postgresql_cdc_spark.streaming.source import write_wal_archive
+
+    base = _gate_dir(tag)
+    arch = os.path.join(base, "wal")
+    sink_dir = os.path.join(base, "changelog")
+    for k, frames in enumerate((first, second)):
+        write_wal_archive(arch, frames, chunk=f"{k:06d}.wal")
+        _run_stream(
+            spark, arch, base,
+            lambda b, bid: b.write.mode("append").parquet(sink_dir),
+            max_records=25,
+        )
+    return spark.read.parquet(sink_dir)
 
 
 @register(
@@ -331,46 +467,9 @@ def cdc_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "map; rows after carry it.",
 )
 def cdc_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    rel_v1 = Relation(
-        relation_id=16392, schema="public", name="accounts_v",
-        replica_identity="d",
-        columns=(ColumnMeta("id", 20, flags=1), ColumnMeta("v_int", 23)),
-    )
-    rel_v2 = Relation(
-        relation_id=16392, schema="public", name="accounts_v",
-        replica_identity="d",
-        columns=(ColumnMeta("id", 20, flags=1), ColumnMeta("v_int", 23),
-                 ColumnMeta("v_note", 1043)),
-    )
-
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_se_{run}_")
-    arch = os.path.join(base, "wal")
-
-    frames = [(1, encode_relation(rel_v1))]
-    lsn = 10
-    frames.append((lsn, encode_begin(lsn + 51, 0, 1)))
-    for i in range(50):
-        lsn += 1
-        frames.append((lsn, encode_insert(
-            rel_v1.relation_id, [str(i), str((i * 3) % 17)])))
-    lsn += 1
-    frames.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-    lsn += 1
-    frames.append((lsn, encode_relation(rel_v2)))  # DDL: column added
-    lsn += 1
-    frames.append((lsn, encode_begin(lsn + 51, 0, 2)))
-    for i in range(50, 100):
-        lsn += 1
-        frames.append((lsn, encode_insert(
-            rel_v2.relation_id, [str(i), str((i * 3) % 17), f"n{i}"])))
-    lsn += 1
-    frames.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-    write_wal_archive(arch, frames)
-
-    log = _run_stream_to_memory(spark, arch, base)
+    base = _gate_dir("se")
+    frames, _ = _evolution_frames(16392, "accounts_v")
+    log = _run_stream(spark, _archive(base, frames), base)
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state, {"id": "bigint", "v_int": "int", "v_note": "string"}, keep=()
@@ -394,33 +493,10 @@ def cdc_stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path (the single-batch variant never exercises them).",
 )
 def cdc_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from postgresql_cdc_spark.streaming.source import PgCdcDataSource
-
-    try:
-        spark.dataSource.register(PgCdcDataSource)
-    except Exception:  # noqa: BLE001 - already registered in this session
-        pass
-
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_mb_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-
-    sink = f"cdc_gate_{run}"
-    q = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "30")
-        .load()
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
+    base = _gate_dir("mb")
+    log = _run_stream(
+        spark, _archive(base, _archive_frames()), base, max_records=30
     )
-    _drain_bounded(q)
-
-    log = spark.table(sink)
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state, {"id": "bigint", "v_int": "int", "v_text": "string"}, keep=()
@@ -445,32 +521,93 @@ _AUDIT_REL = Relation(
 _T0_MS = 1_700_000_000_000
 
 
-def _build_join_archives(arch_a: str, arch_b: str) -> None:
-    """Two deterministic single-table archives: stream A inserts accounts
-    0..N-1 (one txn each); stream B audits every 3rd id."""
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
+def _acct_insert(i: int) -> bytes:
+    return encode_insert(
+        _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
+    )
 
+
+def _single_row_txns(frames: list, ids, xid0: int, payload,
+                     lsn: int = 10) -> int:
+    """Append one single-row txn ``payload(i)`` per id (xid ``xid0 + i``)
+    from ``lsn``; returns the next lsn."""
+    for i in ids:
+        lsn, _ = _append_txn(frames, [payload(i)], lsn, xid0 + i)
+    return lsn
+
+
+def _audit_join(spark: SparkSession, tag: str, change_ids, audit_ids,
+                xid0: int, how: str,
+                max_records: int | None = None) -> DataFrame:
+    """The stream-stream join gates' shared body. Two single-table
+    archives of one-row txns — account changes for ``change_ids`` (xids
+    from ``xid0``) and audits for ``audit_ids`` (xids from ``xid0 +
+    1000``) — each derive an event time from the payload id (change at
+    minute i, audit 30 s later), carry a 2-minute watermark, and join on
+    id with the audit inside a 1-minute window after the change. Ids at
+    or above N are a far-future flush tail: they advance the watermark
+    and are then filtered out; the filter references the event-time
+    column, so Catalyst keeps it ABOVE the watermark node (it never
+    pushes a predicate on the watermark attribute through it)."""
+    from pyspark.sql import functions as F
+
+    base = _gate_dir(tag)
     frames_a = [(1, encode_relation(_REL))]
-    lsn = 10
-    for i in range(N):
-        frames_a.append((lsn, encode_begin(lsn + 2, 0, 1000 + i)))
-        frames_a.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames_a.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_a, frames_a)
-
+    _single_row_txns(frames_a, change_ids, xid0, _acct_insert)
     frames_b = [(1, encode_relation(_AUDIT_REL))]
-    lsn = 10
-    for i in range(0, N, 3):
-        frames_b.append((lsn, encode_begin(lsn + 2, 0, 2000 + i)))
-        frames_b.append((lsn + 1, encode_insert(
+    _single_row_txns(
+        frames_b, audit_ids, xid0 + 1000,
+        lambda i: encode_insert(
             _AUDIT_REL.relation_id, [str(i), f"aud-{i % 7}"]
-        )))
-        frames_b.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_b, frames_b)
+        ),
+    )
+
+    # the typed projection happens BEFORE the join so the join state holds
+    # skinny rows, and each side gets its own watermark
+    ch_id = F.element_at("columns", "id").cast("long")
+    changes = (
+        _pgcdc(spark, _archive(base, frames_a, "wal_a"), max_records)
+        .select(
+            ch_id.alias("id"),
+            F.element_at("columns", "v_int").cast("int").alias("v_int"),
+            F.timestamp_millis(F.lit(_T0_MS) + ch_id * 60_000).alias("ch_ts"),
+        )
+        .withWatermark("ch_ts", "2 minutes")
+        .where((F.col("id") < N) | F.col("ch_ts").isNull())
+    )
+    au_id = F.element_at("columns", "id").cast("long")
+    audits = (
+        _pgcdc(spark, _archive(base, frames_b, "wal_b"), max_records)
+        .select(
+            au_id.alias("a_id"),
+            F.element_at("columns", "auditor").alias("auditor"),
+            F.timestamp_millis(
+                F.lit(_T0_MS) + au_id * 60_000 + 30_000
+            ).alias("au_ts"),
+        )
+        .withWatermark("au_ts", "2 minutes")
+        .where((F.col("a_id") < N) | F.col("au_ts").isNull())
+    )
+    joined = changes.join(
+        audits,
+        (F.col("id") == F.col("a_id"))
+        & (F.col("au_ts") >= F.col("ch_ts"))
+        & (F.col("au_ts") <= F.col("ch_ts") + F.expr("INTERVAL 1 MINUTE")),
+        how,
+    ).select(
+        F.coalesce(F.col("id"), F.col("a_id")).alias("id"),
+        "v_int",
+        "auditor",
+        (F.unix_millis("au_ts") - F.unix_millis("ch_ts")).alias("lag_ms"),
+    )
+    return _run_stream(spark, joined, base, max_records=max_records)
+
+
+# Far-future flush tail of the outer joins: >= 2 micro-batches at
+# maxRecordsPerBatch=25, because the watermark computed from one batch only
+# takes effect in the next, and outer rows are emitted on state eviction,
+# which needs BOTH watermarks past every real change's join window.
+_FLUSH = [1_000_000 + j for j in range(50)]
 
 
 @register(
@@ -493,60 +630,7 @@ def _build_join_archives(arch_a: str, arch_b: str) -> None:
         "audits match, each 30s after its change.",
 )
 def cdc_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ssj_{run}_")
-    arch_a = os.path.join(base, "wal_a")
-    arch_b = os.path.join(base, "wal_b")
-    _build_join_archives(arch_a, arch_b)
-
-    def read(arch):
-        return (
-            spark.readStream.format("pgcdc")
-            .option("path", arch)
-            .option("readall", "true")
-            .load()
-        )
-
-    # event time derives from the payload id: change at minute i, audit 30s
-    # after — the typed projection happens BEFORE the join so the join state
-    # holds skinny rows, and each side gets its own watermark.
-    ch_id = F.element_at("columns", "id").cast("long")
-    changes = (
-        read(arch_a)
-        .select(
-            ch_id.alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            F.timestamp_millis(F.lit(_T0_MS) + ch_id * 60_000).alias("ch_ts"),
-        )
-        .withWatermark("ch_ts", "2 minutes")
-    )
-    au_id = F.element_at("columns", "id").cast("long")
-    audits = (
-        read(arch_b)
-        .select(
-            au_id.alias("a_id"),
-            F.element_at("columns", "auditor").alias("auditor"),
-            F.timestamp_millis(
-                F.lit(_T0_MS) + au_id * 60_000 + 30_000
-            ).alias("au_ts"),
-        )
-        .withWatermark("au_ts", "2 minutes")
-    )
-    joined = changes.join(
-        audits,
-        (F.col("id") == F.col("a_id"))
-        & (F.col("au_ts") >= F.col("ch_ts"))
-        & (F.col("au_ts") <= F.col("ch_ts") + F.expr("INTERVAL 1 MINUTE")),
-        "inner",
-    ).select(
-        "id", "v_int", "auditor",
-        (F.unix_millis("au_ts") - F.unix_millis("ch_ts")).alias("lag_ms"),
-    )
-
-    return _sink_to_memory(spark, joined, base, available_now=True)
+    return _audit_join(spark, "ssj", range(N), range(0, N, 3), 1000, "inner")
 
 
 @register(
@@ -570,33 +654,14 @@ def cdc_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ddw_{run}_")
-    arch = os.path.join(base, "wal")
-
-    def insert_txn(frames, lsn, xid, i):
-        frames.append((lsn, encode_begin(lsn + 2, 0, xid)))
-        frames.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        return lsn + 3
-
     frames = [(1, encode_relation(_REL))]
-    lsn = 10
-    for i in range(N):
-        lsn = insert_txn(frames, lsn, 3000 + i, i)
-        if i == 0:  # adjacent duplicate: same-micro-batch dedup path
-            lsn = insert_txn(frames, lsn, 3000 + i, i)
+    # id 0 twice in a row: the same-micro-batch dedup path
+    lsn = _single_row_txns(frames, [0, *range(N)], 3000, _acct_insert)
     # crash-replay tail: the relay re-ships the last unacked chunk AFTER the
     # originals, so these duplicates arrive in a later micro-batch; by then
     # the watermark has advanced past the older ones (late-data drop) while
     # the newest still dedup via cross-batch state.
-    for i in range(88, N):
-        lsn = insert_txn(frames, lsn, 4000 + i, i)
-    write_wal_archive(arch, frames)
+    _single_row_txns(frames, range(88, N), 4000, _acct_insert, lsn)
 
     rid = F.element_at("columns", "id").cast("long")
 
@@ -612,8 +677,10 @@ def cdc_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataF
             .select("id", "v_int")
         )
 
-    return _run_stream_to_memory(spark, arch, base, transform=dedup,
-                                 max_records=25)
+    base = _gate_dir("ddw")
+    return _run_stream(
+        spark, _archive(base, frames), base, max_records=25, transform=dedup
+    )
 
 
 @register(
@@ -635,11 +702,6 @@ def cdc_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataF
 def cdc_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_enrich_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-
     nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).select(
         F.col("n_nationkey").cast("long").alias("n_nationkey"), "n_name"
     )
@@ -653,7 +715,10 @@ def cdc_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(nation), inserts["id"] % 25 == nation["n_nationkey"]
         ).select("id", "v_int", "n_name")
 
-    return _run_stream_to_memory(spark, arch, base, transform=enrich)
+    base = _gate_dir("enrich")
+    return _run_stream(
+        spark, _archive(base, _archive_frames()), base, transform=enrich
+    )
 
 
 @register(
@@ -687,46 +752,24 @@ def cdc_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle as cdc_stream_end_to_end.",
 )
 def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from pyspark.sql import functions as F
-
     from postgresql_cdc_spark.streaming.join_ivm import (
         ingest_kv_batch,
         key_state,
     )
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_upsert_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
+    base = _gate_dir("upsert")
     store = os.path.join(base, "state_kv")
     DDL = "id long, v_int int, v_text string, op string, lsn long"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            F.element_at("columns", "v_text").alias("v_text"),
-            "op", "lsn",
-        )
         ingest_kv_batch(
-            batch_df.sparkSession, store, "id", int(batch_id), decoded
+            batch_df.sparkSession, store, "id", int(batch_id),
+            _decode(batch_df, "accounts", DDL),
         )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    _run_stream(
+        spark, _archive(base, _archive_frames()), base, upsert, max_records=25
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
     if not os.path.isdir(store):
         raise RuntimeError("no micro-batch reached the upsert sink")
     return key_state(spark, store, DDL, "id").select("id", "v_int", "v_text")
@@ -743,32 +786,35 @@ _WINDOWED_COUNTS_ORACLE = f"""
 """
 
 
-def _windowed_insert_counts(spark: SparkSession, base: str):
-    """Fresh archive + the shared event-time windowed insert-count stream:
-    tumbling 10-minute windows over the insert ops, real micro-batches
-    (maxRecordsPerBatch=25) so aggregation state carries across batches."""
+def _windowed_insert_counts(spark: SparkSession, tag: str, sink=None,
+                            output_mode: str = "append") -> DataFrame | None:
+    """Stream the standard archive through the shared event-time
+    windowed insert count (tumbling 10-minute windows over the insert
+    ops) in real micro-batches (maxRecordsPerBatch=25), so aggregation
+    state carries across batches; only the sink and output mode differ
+    between the two output-mode gates."""
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-
     rid = F.element_at("columns", "id").cast("long")
-    return (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-        .where(F.col("op") == "I")
-        .select(
-            F.timestamp_millis(F.lit(_T0_MS) + rid * 60_000).alias("ts")
+
+    def counts(stream):
+        return (
+            stream.where(F.col("op") == "I")
+            .select(
+                F.timestamp_millis(F.lit(_T0_MS) + rid * 60_000).alias("ts")
+            )
+            .groupBy(F.window("ts", "10 minutes").alias("win"))
+            .agg(F.count(F.lit(1)).alias("n_inserts"))
+            .select(
+                F.unix_millis(F.col("win.start")).alias("win_start_ms"),
+                "n_inserts",
+            )
         )
-        .groupBy(F.window("ts", "10 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_inserts"))
-        .select(
-            F.unix_millis(F.col("win.start")).alias("win_start_ms"),
-            "n_inserts",
-        )
+
+    base = _gate_dir(tag)
+    return _run_stream(
+        spark, _archive(base, _archive_frames()), base, sink,
+        max_records=25, transform=counts, output_mode=output_mode,
     )
 
 
@@ -786,11 +832,7 @@ def _windowed_insert_counts(spark: SparkSession, base: str):
         "mode with a watermark, gated in events_* and the dedup queries).",
 )
 def cdc_stream_agg_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = tempfile.mkdtemp(prefix=f"pgcdc_aggc_{uuid.uuid4().hex[:12]}_")
-    stream = _windowed_insert_counts(spark, base)
-    return _sink_to_memory(
-        spark, stream, base, available_now=False, output_mode="complete"
-    )
+    return _windowed_insert_counts(spark, "aggc", output_mode="complete")
 
 
 @register(
@@ -807,23 +849,13 @@ def cdc_stream_agg_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "windows (bounded by window cardinality, not stream size).",
 )
 def cdc_stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = tempfile.mkdtemp(prefix=f"pgcdc_aggu_{uuid.uuid4().hex[:12]}_")
-    agg = _windowed_insert_counts(spark, base)
-
     current: dict[int, int] = {}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         for row in batch_df.collect():  # ≤ distinct windows per batch
             current[row["win_start_ms"]] = row["n_inserts"]
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
+    _windowed_insert_counts(spark, "aggu", upsert, output_mode="update")
     return spark.createDataFrame(
         sorted(current.items()), "win_start_ms bigint, n_inserts bigint"
     )
@@ -853,44 +885,12 @@ def cdc_stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "confirmed LSN, CdcEngine.java:143-159).",
 )
 def cdc_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from pyspark.sql import functions as F
-
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_restart_{run}_")
-    arch = os.path.join(base, "wal")
-    ckpt = os.path.join(base, "ckpt")
-    sink_dir = os.path.join(base, "changelog")
 
     frames = _archive_frames()
     commit_idx = [i for i, (_, p) in enumerate(frames) if p[:1] == b"C"]
     cut = commit_idx[5] + 1  # txn boundary after the 6th insert txn
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.format("pgcdc")
-            .option("path", arch)
-            .option("maxRecordsPerBatch", "25")
-            .load()
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, bid: b.write.mode("append").parquet(sink_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain_bounded(q)
-
-    write_wal_archive(arch, frames[:cut], chunk="000000.wal")
-    run_once()  # first query: six txns, then a clean stop
-    write_wal_archive(arch, frames[cut:], chunk="000001.wal")
-    run_once()  # NEW query, same checkpoint: must resume, not replay
-
-    log = spark.read.parquet(sink_dir)
+    log = _restart_changelog(spark, "restart", frames[:cut], frames[cut:])
     state = materialize(log, keys=["id"], merge_sparse=False)
     typed = typed_view(
         state, {"id": "bigint", "v_int": "int", "v_text": "string"}, keep=()
@@ -939,12 +939,6 @@ _ROUTE_AUDIT_REL = Relation(
 def cdc_multi_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_multi_{run}_")
-    arch = os.path.join(base, "wal")
-
     frames = [(1, encode_relation(_REL)), (2, encode_relation(_ROUTE_AUDIT_REL))]
     lsn = 10
     xid = 100
@@ -979,9 +973,8 @@ def cdc_multi_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )))
     lsn += 1
     frames.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-    write_wal_archive(arch, frames)
-
-    log = _run_stream_to_memory(spark, arch, base)
+    base = _gate_dir("multi")
+    log = _run_stream(spark, _archive(base, frames), base)
     state = materialize(log, keys=["id"], merge_sparse=False)
     # per-table fan-out through the consumer surface's demux helper
     # (filter on (table, schema) + typed view), not ad-hoc filters — this
@@ -1019,73 +1012,10 @@ def cdc_multi_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recovery, whose behaviors only meet in this order of events.",
 )
 def cdc_restart_with_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    rel_v1 = Relation(
-        relation_id=16394, schema="public", name="accounts_rv",
-        replica_identity="d",
-        columns=(ColumnMeta("id", 20, flags=1), ColumnMeta("v_int", 23)),
-    )
-    rel_v2 = Relation(
-        relation_id=16394, schema="public", name="accounts_rv",
-        replica_identity="d",
-        columns=(ColumnMeta("id", 20, flags=1), ColumnMeta("v_int", 23),
-                 ColumnMeta("v_note", 1043)),
-    )
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_rve_{run}_")
-    arch = os.path.join(base, "wal")
-    ckpt = os.path.join(base, "ckpt")
-    sink_dir = os.path.join(base, "changelog")
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.format("pgcdc")
-            .option("path", arch)
-            .option("maxRecordsPerBatch", "25")
-            .load()
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, bid: b.write.mode("append").parquet(sink_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _drain_bounded(q)
-
-    frames = [(1, encode_relation(rel_v1))]
-    lsn = 10
-    frames.append((lsn, encode_begin(lsn + 51, 0, 1)))
-    for i in range(50):
-        lsn += 1
-        frames.append((lsn, encode_insert(
-            rel_v1.relation_id, [str(i), str((i * 3) % 17)])))
-    lsn += 1
-    frames.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-    write_wal_archive(arch, frames, chunk="000000.wal")
-    run_once()  # consumes the v1-schema txn, stops cleanly
-
-    # shipped while the pipeline was down: DDL (re-sent RELATION) + v2 rows
-    frames2 = []
-    lsn += 1
-    frames2.append((lsn, encode_relation(rel_v2)))
-    lsn += 1
-    frames2.append((lsn, encode_begin(lsn + 51, 0, 2)))
-    for i in range(50, N):
-        lsn += 1
-        frames2.append((lsn, encode_insert(
-            rel_v2.relation_id, [str(i), str((i * 3) % 17), f"n{i}"])))
-    lsn += 1
-    frames2.append((lsn, encode_commit(lsn, lsn + 1, 0)))
-    write_wal_archive(arch, frames2, chunk="000001.wal")
-    run_once()  # NEW query: resume + evolved registry
-
-    log = spark.read.parquet(sink_dir)
+    # the first query consumes the v1-schema txn and stops cleanly; the DDL
+    # (re-sent RELATION) and the v2 rows ship while the pipeline is down
+    frames, ddl_at = _evolution_frames(16394, "accounts_rv")
+    log = _restart_changelog(spark, "rve", frames[:ddl_at], frames[ddl_at:])
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state,
@@ -1121,9 +1051,7 @@ def cdc_txn_stats_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from postgresql_cdc_spark.streaming.consumer import txn_stats
 
     _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_txns_{uuid.uuid4().hex[:12]}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
+    arch = _archive(_gate_dir("txns"), _archive_frames())
     log = spark.read.format("pgcdc").option("path", arch).load()
     return txn_stats(log)
 
@@ -1152,8 +1080,7 @@ def cdc_txn_stats_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_relay_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from postgresql_cdc_spark.streaming.source import run_wal_relay
 
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_relay_{run}_")
+    base = _gate_dir("relay")
     arch = os.path.join(base, "wal")
     frames = _archive_frames()
 
@@ -1177,7 +1104,7 @@ def cdc_relay_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not t.acked or t.acked[-1] != frames[-1][0]:
         raise RuntimeError(f"final ack {t.acked[-1:]} != last frame lsn")
 
-    log = _run_stream_to_memory(spark, arch, base)
+    log = _run_stream(spark, arch, base)
     state = materialize(log, keys=["id"], merge_sparse=False)
     return typed_view(
         state, {"id": "bigint", "v_int": "int", "v_text": "string"}, keep=()
@@ -1212,11 +1139,9 @@ def cdc_relay_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_snapshot_handover(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_snap_{run}_")
-    arch = os.path.join(base, "wal")
+    base = _gate_dir("snap")
     frames = _archive_frames()
-    _build_archive(arch)
+    arch = _archive(base, frames)
 
     # The snapshot's consistent point: the commit LSN of the 5th insert
     # transaction (payload tag 'C' is protocol-fixed, pgoutput commit).
@@ -1241,9 +1166,7 @@ def cdc_snapshot_handover(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("columns"),
     )
 
-    log = _run_stream_to_memory(
-        spark, arch, base, options={"startLsn": snap_lsn}
-    )
+    log = _run_stream(spark, _pgcdc(spark, arch, startLsn=snap_lsn), base)
     counts = (
         log.select(F.element_at("columns", "id").cast("long").alias("id"))
         .groupBy("id")
@@ -1324,36 +1247,19 @@ def _scd2_hist_from_stream(spark: SparkSession, tag: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_{tag}_{run}_")
-    arch = os.path.join(base, "wal")
+    base = _gate_dir(tag)
     log_dir = os.path.join(base, "changelog")
-    _build_archive(arch)
+    ddl = "id long, v_int int, op string, lsn long"
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            "op", "lsn",
-        ).write.mode("append").parquet(log_dir)
+        _decode(batch_df, "accounts", ddl).write.mode("append").parquet(
+            log_dir
+        )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    _run_stream(
+        spark, _archive(base, _archive_frames()), base, land, max_records=25
     )
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
-    log = spark.read.schema("id long, v_int int, op string, lsn long").parquet(
-        log_dir
-    )
+    log = spark.read.schema(ddl).parquet(log_dir)
     w = Window.partitionBy("id").orderBy("lsn")
     return (
         log.withColumn("valid_to_lsn", F.lead("lsn").over(w))
@@ -1478,29 +1384,21 @@ def cdc_stream_asof_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivm_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
+    from postgresql_cdc_spark.streaming.join_ivm import (
+        fold_versioned,
+        ingest_and_delta,
+        prev_version,
+        version_dir,
+    )
+
     STATE_DDL = "id long, v_int int, op string, lsn long"
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            fold_versioned,
-            ingest_and_delta,
-        )
-
+    def ivm_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
         ss = batch_df.sparkSession
         bid = int(batch_id)
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            "op", "lsn",
-        )
         delta = ingest_and_delta(
-            ss, os.path.join(base, "state_kv"), STATE_DDL,
-            "id", ["v_int"], bid, decoded,
+            ss, os.path.join(state, "state_kv"), STATE_DDL,
+            "id", ["v_int"], bid, _decode(batch_df, "accounts", STATE_DDL),
         )
         deltas = delta.select(
             (F.col("v_int") % 3).cast("int").alias("grp"),
@@ -1508,34 +1406,17 @@ def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sign") * F.col("v_int")).cast("long").alias("dq"),
         )
         fold_versioned(
-            ss, base, "sums", "grp int, dn long, dq long", ["grp"],
+            ss, state, "sums", "grp int, dn long, dq long", ["grp"],
             bid, deltas, drop_when_zero="dn",
         )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
-    from postgresql_cdc_spark.streaming.join_ivm import (
-        prev_version,
-        version_dir,
-    )
-
-    last = prev_version(base, "sums", None)
+    state = _ivm_stream(spark, "ivm", _archive_frames(), ivm_batch)
+    last = prev_version(state, "sums", None)
     if last is None:
         raise RuntimeError("no micro-batch reached the IVM sink")
     return (
         spark.read.schema("grp int, dn long, dq long")
-        .parquet(version_dir(base, "sums", last))
+        .parquet(version_dir(state, "sums", last))
         .select("grp", F.col("dn").alias("n_rows"), F.col("dq").alias("total"))
     )
 
@@ -1579,14 +1460,7 @@ _SESSION_WIN_ORACLE = f"""
 def cdc_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_sess_{uuid.uuid4().hex[:12]}_")
-    arch = os.path.join(base, "wal")
-
     frames = [(1, encode_relation(_REL))]
-    lsn = 10
     # Flush tail: 50 far-future events spanning >= 2 micro-batches at
     # maxRecordsPerBatch=25 — the first flush batch advances the watermark
     # past every real session END, and the batch after it is the one where
@@ -1594,52 +1468,48 @@ def cdc_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # between batches; a tail that fits in ONE final batch would advance
     # the watermark with no later batch left to emit in, and
     # processAllAvailable does not wait for no-data batches).
-    for i in list(range(N)) + [1_000_000 + j for j in range(50)]:
-        frames.append((lsn, encode_begin(lsn + 2, 0, 7000 + i)))
-        frames.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch, frames)
+    _single_row_txns(frames, [*range(N), *_FLUSH], 7000, _acct_insert)
 
     rid = F.element_at("columns", "id").cast("long")
-    agg = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-        .where(F.col("op") == "I")
-        .select(
-            rid.alias("rid"),
-            (rid % 4).alias("user_id"),
-            F.timestamp_millis(
-                F.lit(_T0_MS) + rid * 60_000
-                + F.when(rid >= 60, 3_600_000).otherwise(0)
-            ).alias("ts"),
+
+    def sessions(stream):
+        return (
+            stream.where(F.col("op") == "I")
+            .select(
+                rid.alias("rid"),
+                (rid % 4).alias("user_id"),
+                F.timestamp_millis(
+                    F.lit(_T0_MS) + rid * 60_000
+                    + F.when(rid >= 60, 3_600_000).otherwise(0)
+                ).alias("ts"),
+            )
+            .withWatermark("ts", "10 minutes")
+            # The flush rows must be dropped AFTER the watermark node — but
+            # a deterministic predicate on rid alone gets pushed below
+            # EventTimeWatermark by Catalyst (straight to the source), and
+            # the flush rows would then never advance the watermark.
+            # Referencing the event-time column pins the filter above the
+            # watermark node (Spark never pushes predicates that mention
+            # the watermark attribute through it); ts is never null, so
+            # the semantics are exactly rid < N.
+            .where((F.col("rid") < N) | F.col("ts").isNull())
+            .groupBy(
+                F.session_window("ts", "5 minutes").alias("win"), "user_id"
+            )
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                "user_id",
+                F.unix_millis(F.col("win.start")).alias("session_start_ms"),
+                F.unix_millis(F.col("win.end")).alias("session_end_ms"),
+                F.col("n_events").cast("bigint").alias("n_events"),
+            )
         )
-        .withWatermark("ts", "10 minutes")
-        # The flush rows must be dropped AFTER the watermark node — but a
-        # deterministic predicate on rid alone gets pushed below
-        # EventTimeWatermark by Catalyst (straight to the source), and the
-        # flush rows would then never advance the watermark. Referencing
-        # the event-time column pins the filter above the watermark node
-        # (Spark never pushes predicates that mention the watermark
-        # attribute through it); ts is never null, so the semantics are
-        # exactly rid < N.
-        .where((F.col("rid") < N) | F.col("ts").isNull())
-        .groupBy(
-            F.session_window("ts", "5 minutes").alias("win"), "user_id"
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_millis(F.col("win.start")).alias("session_start_ms"),
-            F.unix_millis(F.col("win.end")).alias("session_end_ms"),
-            F.col("n_events").cast("bigint").alias("n_events"),
-        )
+
+    base = _gate_dir("sess")
+    return _run_stream(
+        spark, _archive(base, frames), base, max_records=25,
+        transform=sessions,
     )
-    return _sink_to_memory(spark, agg, base, available_now=False)
 
 
 # --- streaming sliding windows -----------------------------------------------
@@ -1672,67 +1542,30 @@ _SLIDING_COUNTS_ORACLE = f"""
 def cdc_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_slid_{uuid.uuid4().hex[:12]}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-
     rid = F.element_at("columns", "id").cast("long")
-    agg = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-        .where(F.col("op") == "I")
-        .select(
-            F.timestamp_millis(F.lit(_T0_MS) + rid * 60_000).alias("ts")
+
+    def counts(stream):
+        return (
+            stream.where(F.col("op") == "I")
+            .select(
+                F.timestamp_millis(F.lit(_T0_MS) + rid * 60_000).alias("ts")
+            )
+            .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"))
+            .agg(F.count(F.lit(1)).alias("n_inserts"))
+            .select(
+                F.unix_millis(F.col("win.start")).alias("win_start_ms"),
+                F.col("n_inserts").cast("bigint").alias("n_inserts"),
+            )
         )
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_inserts"))
-        .select(
-            F.unix_millis(F.col("win.start")).alias("win_start_ms"),
-            F.col("n_inserts").cast("bigint").alias("n_inserts"),
-        )
-    )
-    return _sink_to_memory(
-        spark, agg, base, available_now=False, output_mode="complete"
+
+    base = _gate_dir("slid")
+    return _run_stream(
+        spark, _archive(base, _archive_frames()), base, max_records=25,
+        transform=counts, output_mode="complete",
     )
 
 
 # --- streaming LEFT OUTER stream-stream join ----------------------------------
-
-def _build_outer_join_archives(arch_a: str, arch_b: str) -> None:
-    """The cdc_stream_stream_join archives plus a 50-event far-future flush
-    tail on EACH stream: outer-row emission needs BOTH watermarks (the join
-    uses their minimum) to advance past every real change's join window, and
-    the tail must span >= 2 micro-batches at maxRecordsPerBatch=25 because
-    the watermark computed from one batch only takes effect in the next."""
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    flush = [1_000_000 + j for j in range(50)]
-
-    frames_a = [(1, encode_relation(_REL))]
-    lsn = 10
-    for i in list(range(N)) + flush:
-        frames_a.append((lsn, encode_begin(lsn + 2, 0, 3000 + i)))
-        frames_a.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames_a.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_a, frames_a)
-
-    frames_b = [(1, encode_relation(_AUDIT_REL))]
-    lsn = 10
-    for i in list(range(0, N, 3)) + flush:
-        frames_b.append((lsn, encode_begin(lsn + 2, 0, 4000 + i)))
-        frames_b.append((lsn + 1, encode_insert(
-            _AUDIT_REL.relation_id, [str(i), f"aud-{i % 7}"]
-        )))
-        frames_b.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_b, frames_b)
-
 
 @register(
     "cdc_stream_outer_join",
@@ -1761,95 +1594,13 @@ def _build_outer_join_archives(arch_a: str, arch_b: str) -> None:
         "id % 3 = 0, lag fixed at 30s.",
 )
 def cdc_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_soj_{uuid.uuid4().hex[:12]}_")
-    arch_a = os.path.join(base, "wal_a")
-    arch_b = os.path.join(base, "wal_b")
-    _build_outer_join_archives(arch_a, arch_b)
-
-    def read(arch):
-        return (
-            spark.readStream.format("pgcdc")
-            .option("path", arch)
-            .option("maxRecordsPerBatch", "25")
-            .load()
-        )
-
-    ch_id = F.element_at("columns", "id").cast("long")
-    changes = (
-        read(arch_a)
-        .select(
-            ch_id.alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            F.timestamp_millis(F.lit(_T0_MS) + ch_id * 60_000).alias("ch_ts"),
-        )
-        .withWatermark("ch_ts", "2 minutes")
-        # flush rows advance the watermark, then leave; the ts reference
-        # pins the filter above EventTimeWatermark (ch_ts is never null).
-        .where((F.col("id") < N) | F.col("ch_ts").isNull())
+    return _audit_join(
+        spark, "soj", [*range(N), *_FLUSH], [*range(0, N, 3), *_FLUSH], 3000,
+        "left_outer", max_records=25,
     )
-    au_id = F.element_at("columns", "id").cast("long")
-    audits = (
-        read(arch_b)
-        .select(
-            au_id.alias("a_id"),
-            F.element_at("columns", "auditor").alias("auditor"),
-            F.timestamp_millis(
-                F.lit(_T0_MS) + au_id * 60_000 + 30_000
-            ).alias("au_ts"),
-        )
-        .withWatermark("au_ts", "2 minutes")
-        .where((F.col("a_id") < N) | F.col("au_ts").isNull())
-    )
-    joined = changes.join(
-        audits,
-        (F.col("id") == F.col("a_id"))
-        & (F.col("au_ts") >= F.col("ch_ts"))
-        & (F.col("au_ts") <= F.col("ch_ts") + F.expr("INTERVAL 1 MINUTE")),
-        "left_outer",
-    ).select(
-        "id", "v_int", "auditor",
-        (F.unix_millis("au_ts") - F.unix_millis("ch_ts")).alias("lag_ms"),
-    )
-
-    return _sink_to_memory(spark, joined, base, available_now=False)
 
 
 # --- streaming FULL OUTER stream-stream join -----------------------------------
-
-def _build_full_outer_join_archives(arch_a: str, arch_b: str) -> None:
-    """Asymmetric gaps on BOTH streams so full-outer eviction emits
-    NULL-padded rows from each side: changes skip id % 5 == 4 (audits for
-    those become right-only), audits exist only for id % 3 == 0 (the other
-    changes become left-only). Flush tails per the left-outer gate."""
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    flush = [1_000_000 + j for j in range(50)]
-
-    frames_a = [(1, encode_relation(_REL))]
-    lsn = 10
-    for i in [x for x in range(N) if x % 5 != 4] + flush:
-        frames_a.append((lsn, encode_begin(lsn + 2, 0, 3000 + i)))
-        frames_a.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames_a.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_a, frames_a)
-
-    frames_b = [(1, encode_relation(_AUDIT_REL))]
-    lsn = 10
-    for i in list(range(0, N, 3)) + flush:
-        frames_b.append((lsn, encode_begin(lsn + 2, 0, 4000 + i)))
-        frames_b.append((lsn + 1, encode_insert(
-            _AUDIT_REL.relation_id, [str(i), f"aud-{i % 7}"]
-        )))
-        frames_b.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch_b, frames_b)
-
 
 @register(
     "cdc_stream_full_outer_join",
@@ -1882,94 +1633,15 @@ def _build_full_outer_join_archives(arch_a: str, arch_b: str) -> None:
         "changes gap, plus the right-only audits (id % 15 = 9).",
 )
 def cdc_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_foj_{uuid.uuid4().hex[:12]}_")
-    arch_a = os.path.join(base, "wal_a")
-    arch_b = os.path.join(base, "wal_b")
-    _build_full_outer_join_archives(arch_a, arch_b)
-
-    def read(arch):
-        return (
-            spark.readStream.format("pgcdc")
-            .option("path", arch)
-            .option("maxRecordsPerBatch", "25")
-            .load()
-        )
-
-    ch_id = F.element_at("columns", "id").cast("long")
-    changes = (
-        read(arch_a)
-        .select(
-            ch_id.alias("id"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            F.timestamp_millis(F.lit(_T0_MS) + ch_id * 60_000).alias("ch_ts"),
-        )
-        .withWatermark("ch_ts", "2 minutes")
-        .where((F.col("id") < N) | F.col("ch_ts").isNull())
+    # changes skip id % 5 == 4 (their audits come out right-only) and audits
+    # exist only for id % 3 == 0 (the other changes come out left-only)
+    return _audit_join(
+        spark, "foj", [*(i for i in range(N) if i % 5 != 4), *_FLUSH],
+        [*range(0, N, 3), *_FLUSH], 3000, "full_outer", max_records=25,
     )
-    au_id = F.element_at("columns", "id").cast("long")
-    audits = (
-        read(arch_b)
-        .select(
-            au_id.alias("a_id"),
-            F.element_at("columns", "auditor").alias("auditor"),
-            F.timestamp_millis(
-                F.lit(_T0_MS) + au_id * 60_000 + 30_000
-            ).alias("au_ts"),
-        )
-        .withWatermark("au_ts", "2 minutes")
-        .where((F.col("a_id") < N) | F.col("au_ts").isNull())
-    )
-    joined = changes.join(
-        audits,
-        (F.col("id") == F.col("a_id"))
-        & (F.col("au_ts") >= F.col("ch_ts"))
-        & (F.col("au_ts") <= F.col("ch_ts") + F.expr("INTERVAL 1 MINUTE")),
-        "full_outer",
-    ).select(
-        F.coalesce(F.col("id"), F.col("a_id")).alias("id"),
-        "v_int",
-        "auditor",
-        (F.unix_millis("au_ts") - F.unix_millis("ch_ts")).alias("lag_ms"),
-    )
-
-    return _sink_to_memory(spark, joined, base, available_now=False)
 
 
 # --- TRUNCATE recognized-and-dropped, offsets intact ---------------------------
-
-def _build_truncate_archive(arch: str) -> None:
-    """N insert txns with TRUNCATE-only txns woven through at the nasty
-    spots: before the first insert, after every 10th txn (so several land
-    exactly on maxRecordsPerBatch=25 chunk boundaries), and as the FINAL
-    txn of the archive (the batch cursor must advance past a tail txn that
-    emits no rows, or the stream never reaches a committable offset)."""
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    def trunc_txn(frames, lsn, xid):
-        frames.append((lsn, encode_begin(lsn + 2, 0, xid)))
-        frames.append((lsn + 1, encode_truncate([_REL.relation_id],
-                                                restart_identity=True)))
-        frames.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        return lsn + 3
-
-    frames = [(1, encode_relation(_REL))]
-    lsn = 10
-    lsn = trunc_txn(frames, lsn, 9000)
-    for i in range(N):
-        frames.append((lsn, encode_begin(lsn + 2, 0, 3000 + i)))
-        frames.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-        if i % 10 == 9:
-            lsn = trunc_txn(frames, lsn, 9100 + i)
-    lsn = trunc_txn(frames, lsn, 9999)
-    write_wal_archive(arch, frames)
-
 
 @register(
     "cdc_stream_truncate_drop",
@@ -1991,18 +1663,35 @@ def _build_truncate_archive(arch: str) -> None:
 def cdc_stream_truncate_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix=f"pgcdc_trnc_{uuid.uuid4().hex[:12]}_")
-    arch = os.path.join(base, "wal")
-    _build_truncate_archive(arch)
+    frames = [(1, encode_relation(_REL))]
 
-    def transform(stream):
+    def trunc_txn(lsn: int, xid: int) -> int:
+        return _append_txn(frames, [
+            encode_truncate([_REL.relation_id], restart_identity=True)
+        ], lsn, xid)[0]
+
+    # TRUNCATE-only txns before the first insert, after every 10th insert
+    # txn (several land exactly on 25-record chunk boundaries), and as the
+    # FINAL txn (the batch cursor must advance past a tail txn that emits
+    # no rows, or the stream never reaches a committable offset)
+    lsn = trunc_txn(10, 9000)
+    for t in range(0, N, 10):
+        lsn = _single_row_txns(
+            frames, range(t, t + 10), 3000, _acct_insert, lsn
+        )
+        lsn = trunc_txn(lsn, 9109 + t)
+    trunc_txn(lsn, 9999)
+
+    def inserts(stream):
         return stream.where(F.col("op") == "I").select(
             F.element_at("columns", "id").cast("long").alias("id"),
             F.element_at("columns", "v_int").cast("int").alias("v_int"),
         )
 
-    return _run_stream_to_memory(
-        spark, arch, base, transform=transform, max_records=25
+    base = _gate_dir("trnc")
+    return _run_stream(
+        spark, _archive(base, frames), base, max_records=25,
+        transform=inserts,
     )
 
 
@@ -2037,53 +1726,43 @@ def cdc_stream_truncate_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    base = tempfile.mkdtemp(prefix=f"pgcdc_late_{uuid.uuid4().hex[:12]}_")
-    arch = os.path.join(base, "wal")
-
     # ids: 0..N-1 on time, 500 = the straggler (event-time minute 2,
     # appended AFTER id N-1 so it arrives with the watermark already at
     # ~minute {N}-10), then the >= 2-batch far-future flush tail.
     frames = [(1, encode_relation(_REL))]
-    lsn = 10
-    for i in list(range(N)) + [500] + [1_000_000 + j for j in range(50)]:
-        frames.append((lsn, encode_begin(lsn + 2, 0, 9000 + i)))
-        frames.append((lsn + 1, encode_insert(
-            _REL.relation_id, [str(i), str((i * 7) % 13), f"acct-{i}"]
-        )))
-        frames.append((lsn + 2, encode_commit(lsn + 2, lsn + 3, 0)))
-        lsn += 3
-    write_wal_archive(arch, frames)
+    _single_row_txns(frames, [*range(N), 500, *_FLUSH], 9000, _acct_insert)
 
     rid = F.element_at("columns", "id").cast("long")
     ts_minute = (
         F.when(rid < N, rid).when(rid < 1000, F.lit(2)).otherwise(rid)
     )
-    agg = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-        .where(F.col("op") == "I")
-        .select(
-            rid.alias("rid"),
-            F.timestamp_millis(F.lit(_T0_MS) + ts_minute * 60_000).alias("ts"),
+
+    def counts(stream):
+        return (
+            stream.where(F.col("op") == "I")
+            .select(
+                rid.alias("rid"),
+                F.timestamp_millis(
+                    F.lit(_T0_MS) + ts_minute * 60_000
+                ).alias("ts"),
+            )
+            .withWatermark("ts", "10 minutes")
+            # drop ONLY the flush rows (ts reference pins the filter above
+            # the watermark node); the straggler (rid=500) must reach the
+            # aggregation so the watermark itself is what rejects it.
+            .where((F.col("rid") < 1000) | F.col("ts").isNull())
+            .groupBy(F.window("ts", "10 minutes").alias("win"))
+            .agg(F.count(F.lit(1)).alias("n_inserts"))
+            .select(
+                F.unix_millis(F.col("win.start")).alias("win_start_ms"),
+                F.col("n_inserts").cast("bigint").alias("n_inserts"),
+            )
         )
-        .withWatermark("ts", "10 minutes")
-        # drop ONLY the flush rows (ts reference pins the filter above the
-        # watermark node); the straggler (rid=500) must reach the
-        # aggregation so the watermark itself is what rejects it.
-        .where((F.col("rid") < 1000) | F.col("ts").isNull())
-        .groupBy(F.window("ts", "10 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_inserts"))
-        .select(
-            F.unix_millis(F.col("win.start")).alias("win_start_ms"),
-            F.col("n_inserts").cast("bigint").alias("n_inserts"),
-        )
+
+    base = _gate_dir("late")
+    return _run_stream(
+        spark, _archive(base, frames), base, max_records=25, transform=counts
     )
-    return _sink_to_memory(spark, agg, base, available_now=False)
 
 
 # --- streaming IVM over a JOIN (delta rules, two CDC tables) ------------------
@@ -2233,52 +1912,12 @@ def _ivm_join_frames() -> list:
         "independent of state size.",
 )
 def cdc_stream_ivm_join_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmj_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _ivm_join_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # route the envelope per table, then apply the delta rule through
-        # the disk-versioned step: every prior-state read resolves
-        # STRICTLY BELOW batch_id, so a replayed batch never sees its own
-        # crashed attempt's partial writes (streaming/join_ivm.py; the
-        # crash windows are pinned by tests/test_join_ivm.py)
-        d_batch = batch_df.where(F.col("table") == "dim_grp").select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "grp").cast("int").alias("grp"),
-            "op", "lsn",
-        )
-        f_batch = batch_df.where(F.col("table") == "fact_amt").select(
-            F.element_at("columns", "fid").cast("long").alias("fid"),
-            F.element_at("columns", "did").cast("long").alias("did"),
-            F.element_at("columns", "amount").cast("int").alias("amount"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, d_batch, f_batch
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmj", _ivm_join_frames(),
+        _spec_batch(join_ivm.DEFAULT_SPEC, "fact_amt", "dim_grp"),
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
     return join_ivm.latest_sums(spark, state)
 
 
@@ -2329,14 +1968,6 @@ def cdc_stream_ivm_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
     from postgresql_cdc_spark.streaming import join_ivm
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmm_{run}_")
-    arch = os.path.join(base, "wal")
-    _build_archive(arch)
-    state = os.path.join(base, "state")
-    os.makedirs(state)
-
     spec = join_ivm.JoinViewSpec(
         fact_ddl="id long, grp int, v_int int, op string, lsn long",
         fact_key="id",
@@ -2349,32 +1980,17 @@ def cdc_stream_ivm_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         ),
     )
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            (F.element_at("columns", "id").cast("long") % 3)
-            .cast("int").alias("grp"),
-            F.element_at("columns", "v_int").cast("int").alias("v_int"),
-            "op", "lsn",
+    def ivm_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        # grp is derived from the key, not carried in the envelope
+        decoded = _decode(batch_df, "accounts", spec.fact_ddl).withColumn(
+            "grp", (F.col("id") % 3).cast("int")
         )
         join_ivm.apply_batch(
             batch_df.sparkSession, state, batch_id, None, decoded,
             spec=spec,
         )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
+    state = _ivm_stream(spark, "ivmm", _archive_frames(), ivm_batch)
     return join_ivm.latest_view(spark, state, spec).select(
         "grp", F.col("dn").alias("n_rows"), "min_v", "max_v"
     )
@@ -2515,15 +2131,6 @@ def cdc_stream_ivm_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmr_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _rev_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
         dim_ddl="pid long, cat int, tier int, op string, lsn long",
@@ -2536,38 +2143,10 @@ def cdc_stream_ivm_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=("cat", "tier"),
         measures=(("revenue", "price * qty"), ("units", "qty")),
     )
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        d_batch = batch_df.where(F.col("table") == "part_cat").select(
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "cat").cast("int").alias("cat"),
-            F.element_at("columns", "tier").cast("int").alias("tier"),
-            "op", "lsn",
-        )
-        f_batch = batch_df.where(F.col("table") == "order_items").select(
-            F.element_at("columns", "iid").cast("long").alias("iid"),
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "price").cast("int").alias("price"),
-            F.element_at("columns", "qty").cast("int").alias("qty"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, d_batch, f_batch,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmr", _rev_frames(),
+        _spec_batch(spec, "order_items", "part_cat"),
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
     return join_ivm.latest_view(spark, state, spec).select(
         "cat", "tier",
         F.col("dn").alias("n_items"),
@@ -2679,17 +2258,6 @@ def _hc_frames() -> list:
 def cdc_stream_ivm_sums_hicard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmh_{run}_")
-    arch = os.path.join(base, "wal")
-
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    write_wal_archive(arch, _hc_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
-
     from postgresql_cdc_spark.streaming import join_ivm
 
     # since r16 this runs THROUGH the kernel's spec: sums_backend='epoch'
@@ -2705,32 +2273,9 @@ def cdc_stream_ivm_sums_hicard(spark: SparkSession, sf_dir: str) -> DataFrame:
         measures=(("dq", "v"),),
         sums_backend="epoch",
     )
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "cust").cast("long").alias("cust"),
-            F.element_at("columns", "v").cast("int").alias("v"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, None, decoded,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmh", _hc_frames(), _spec_batch(spec, "cust_vals")
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
     return join_ivm.latest_view(spark, state, spec).select(
         "cust", F.col("dn").alias("n_rows"), F.col("dq").alias("total")
     )
@@ -2781,17 +2326,7 @@ def cdc_stream_ivm_distinct_hicard(
 ) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmdh_{run}_")
-    arch = os.path.join(base, "wal")
-
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    write_wal_archive(arch, _hc_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
         fact_ddl="id long, cust long, v int, op string, lsn long",
@@ -2803,32 +2338,9 @@ def cdc_stream_ivm_distinct_hicard(
         distincts=(("n_vals", "v", "int"),),
         sums_backend="epoch",
     )
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "cust").cast("long").alias("cust"),
-            F.element_at("columns", "v").cast("int").alias("v"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, None, decoded,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmdh", _hc_frames(), _spec_batch(spec, "cust_vals")
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
     return join_ivm.latest_view(spark, state, spec).select(
         "cust", F.col("dn").alias("n_rows"), F.col("dq").alias("total"),
         "n_vals", "max_v",
@@ -2893,17 +2405,7 @@ def cdc_stream_ivm_topk_per_group(
 ) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmtk_{run}_")
-    arch = os.path.join(base, "wal")
-
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    write_wal_archive(arch, _hc_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
         fact_ddl="id long, cust long, v int, op string, lsn long",
@@ -2914,32 +2416,9 @@ def cdc_stream_ivm_topk_per_group(
         topks=(("top", "v", "int", 3, "max"),),
         sums_backend="epoch",
     )
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decoded = batch_df.select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "cust").cast("long").alias("cust"),
-            F.element_at("columns", "v").cast("int").alias("v"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, None, decoded,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmtk", _hc_frames(), _spec_batch(spec, "cust_vals")
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
     return join_ivm.latest_view(spark, state, spec).select(
         "cust", F.col("dn").alias("n_rows"), F.col("dq").alias("total"),
         F.col("top1").cast("int").alias("top1"),
@@ -3019,15 +2498,7 @@ def _run_outer_join_gate(
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
 
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_{tag}_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _ivm_join_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
     spec = join_ivm.JoinViewSpec(
         fact_ddl="fid long, did long, amount int, op string, lsn long",
         fact_key="fid",
@@ -3043,37 +2514,10 @@ def _run_outer_join_gate(
         join_type=join_type,
         sums_backend="epoch",
     )
-
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        d_batch = batch_df.where(F.col("table") == "dim_grp").select(
-            F.element_at("columns", "id").cast("long").alias("id"),
-            F.element_at("columns", "grp").cast("int").alias("grp"),
-            "op", "lsn",
-        )
-        f_batch = batch_df.where(F.col("table") == "fact_amt").select(
-            F.element_at("columns", "fid").cast("long").alias("fid"),
-            F.element_at("columns", "did").cast("long").alias("did"),
-            F.element_at("columns", "amount").cast("int").alias("amount"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, d_batch, f_batch,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, tag, _ivm_join_frames(),
+        _spec_batch(spec, "fact_amt", "dim_grp"),
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-
     extra = [e[0] for e in extrema] + [d[0] for d in distincts]
     return join_ivm.latest_view(spark, state, spec).select(
         "grp", F.col("dn").alias("n_rows"), F.col("dq").alias("total"),
@@ -3257,15 +2701,6 @@ def cdc_stream_ivm_snowflake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmsn_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _snow_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
         fact_ddl="iid long, cid long, pid long, price int, qty int, "
@@ -3293,43 +2728,10 @@ def cdc_stream_ivm_snowflake(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        c_batch = batch_df.where(F.col("table") == "cust_seg").select(
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "seg").cast("int").alias("seg"),
-            "op", "lsn",
-        )
-        p_batch = batch_df.where(F.col("table") == "part_brand").select(
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "brand").cast("int").alias("brand"),
-            F.element_at("columns", "rate").cast("int").alias("rate"),
-            "op", "lsn",
-        )
-        f_batch = batch_df.where(F.col("table") == "sale_items").select(
-            F.element_at("columns", "iid").cast("long").alias("iid"),
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "price").cast("int").alias("price"),
-            F.element_at("columns", "qty").cast("int").alias("qty"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id,
-            [c_batch, p_batch], f_batch, spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmsn", _snow_frames(),
+        _spec_batch(spec, "sale_items", "cust_seg", "part_brand"),
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
     return join_ivm.latest_view(spark, state, spec).select(
         "seg", "brand",
         F.col("dn").alias("n_items"),
@@ -3554,15 +2956,6 @@ def cdc_stream_ivm_count_distinct(
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmcd_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _rev_frames())
-    state = os.path.join(base, "state")
-    os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
         dim_ddl="pid long, cat int, tier int, op string, lsn long",
@@ -3578,37 +2971,10 @@ def cdc_stream_ivm_count_distinct(
         distincts=(("n_parts", "pid", "long"), ("n_prices", "price", "int")),
     )
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        d_batch = batch_df.where(F.col("table") == "part_cat").select(
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "cat").cast("int").alias("cat"),
-            F.element_at("columns", "tier").cast("int").alias("tier"),
-            "op", "lsn",
-        )
-        f_batch = batch_df.where(F.col("table") == "order_items").select(
-            F.element_at("columns", "iid").cast("long").alias("iid"),
-            F.element_at("columns", "pid").cast("long").alias("pid"),
-            F.element_at("columns", "price").cast("int").alias("price"),
-            F.element_at("columns", "qty").cast("int").alias("qty"),
-            "op", "lsn",
-        )
-        join_ivm.apply_batch(
-            batch_df.sparkSession, state, batch_id, d_batch, f_batch,
-            spec=spec,
-        )
-
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
+    state = _ivm_stream(
+        spark, "ivmcd", _rev_frames(),
+        _spec_batch(spec, "order_items", "part_cat"),
     )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
     return join_ivm.latest_view(spark, state, spec).select(
         "cat",
         F.col("dn").alias("n_items"),
@@ -3792,57 +3158,24 @@ def cdc_stream_ivm_dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmch_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _chain_frames())
-    comp_state = os.path.join(base, "comp_state")
-    fact_state = os.path.join(base, "fact_state")
-    os.makedirs(comp_state)
-    os.makedirs(fact_state)
 
     comp_spec, fact_spec = join_ivm.chain_spec_pair()
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        n_batch = batch_df.where(F.col("table") == "nations").select(
-            F.element_at("columns", "nk").cast("long").alias("nk"),
-            F.element_at("columns", "region").cast("int").alias("region"),
-            "op", "lsn",
-        )
-        c_batch = batch_df.where(F.col("table") == "customers").select(
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "nk").cast("long").alias("nk"),
-            F.element_at("columns", "seg").cast("int").alias("seg"),
-            "op", "lsn",
-        )
-        o_batch = batch_df.where(F.col("table") == "orders_amt").select(
-            F.element_at("columns", "oid").cast("long").alias("oid"),
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "amount").cast("int").alias("amount"),
-            "op", "lsn",
-        )
+    def ivm_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
         join_ivm.apply_stacked_batch(
-            ss, comp_state, fact_state, batch_id,
-            n_batch, c_batch, o_batch, comp_spec, fact_spec,
+            batch_df.sparkSession,
+            os.path.join(state, "comp"), os.path.join(state, "fact"),
+            batch_id,
+            _decode(batch_df, "nations", comp_spec.dims[0].ddl),
+            _decode(batch_df, "customers", comp_spec.fact_ddl),
+            _decode(batch_df, "orders_amt", fact_spec.fact_ddl),
+            comp_spec, fact_spec,
         )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-    return join_ivm.latest_view(spark, fact_state, fact_spec).select(
+    state = _ivm_stream(spark, "ivmch", _chain_frames(), ivm_batch)
+    return join_ivm.latest_view(
+        spark, os.path.join(state, "fact"), fact_spec
+    ).select(
         "seg", "region",
         F.col("dn").alias("n_orders"),
         "total",
@@ -4026,66 +3359,25 @@ def cdc_stream_ivm_mixed_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming import join_ivm
-    from postgresql_cdc_spark.streaming.source import write_wal_archive
-
-    _register_source(spark)
-    run = uuid.uuid4().hex[:12]
-    base = tempfile.mkdtemp(prefix=f"pgcdc_ivmmx_{run}_")
-    arch = os.path.join(base, "wal")
-    write_wal_archive(arch, _mixed_frames())
-    comp_state = os.path.join(base, "comp_state")
-    fact_state = os.path.join(base, "fact_state")
-    os.makedirs(comp_state)
-    os.makedirs(fact_state)
 
     comp_spec, fact_spec = join_ivm.mixed_chain_spec_pair()
 
-    def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        n_batch = batch_df.where(F.col("table") == "nations").select(
-            F.element_at("columns", "nk").cast("long").alias("nk"),
-            F.element_at("columns", "region").cast("int").alias("region"),
-            "op", "lsn",
-        )
-        c_batch = batch_df.where(F.col("table") == "customers").select(
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "nk").cast("long").alias("nk"),
-            F.element_at("columns", "seg").cast("int").alias("seg"),
-            "op", "lsn",
-        )
-        ch_batch = batch_df.where(F.col("table") == "channels").select(
-            F.element_at("columns", "ch").cast("long").alias("ch"),
-            F.element_at("columns", "kind").cast("int").alias("kind"),
-            "op", "lsn",
-        )
-        o_batch = batch_df.where(F.col("table") == "orders_ch").select(
-            F.element_at("columns", "oid").cast("long").alias("oid"),
-            F.element_at("columns", "cid").cast("long").alias("cid"),
-            F.element_at("columns", "ch").cast("long").alias("ch"),
-            F.element_at("columns", "amount").cast("int").alias("amount"),
-            "op", "lsn",
-        )
+    def ivm_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
         join_ivm.apply_chain_batch(
-            ss,
-            [(comp_state, comp_spec, c_batch),
-             (fact_state, fact_spec, o_batch, [ch_batch])],
+            batch_df.sparkSession,
+            [(os.path.join(state, "comp"), comp_spec,
+              _decode(batch_df, "customers", comp_spec.fact_ddl)),
+             (os.path.join(state, "fact"), fact_spec,
+              _decode(batch_df, "orders_ch", fact_spec.fact_ddl),
+              [_decode(batch_df, "channels", fact_spec.dims[1].ddl)])],
             batch_id,
-            top_d_batch=n_batch,
+            top_d_batch=_decode(batch_df, "nations", comp_spec.dims[0].ddl),
         )
 
-    stream = (
-        spark.readStream.format("pgcdc")
-        .option("path", arch)
-        .option("maxRecordsPerBatch", "25")
-        .load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(ivm_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    _drain_bounded(q)
-    return join_ivm.latest_view(spark, fact_state, fact_spec).select(
+    state = _ivm_stream(spark, "ivmmx", _mixed_frames(), ivm_batch)
+    return join_ivm.latest_view(
+        spark, os.path.join(state, "fact"), fact_spec
+    ).select(
         "seg", "region", "kind",
         F.col("dn").alias("n_orders"),
         "total",

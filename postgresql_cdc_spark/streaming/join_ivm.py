@@ -144,12 +144,12 @@ SUMS_DDL = "grp int, dn long, dq long"
 
 # --- the view spec: one kernel, many maintained views -------------------------
 
-def _ddl_names(ddl: str) -> list[str]:
-    """Top-level field names of a DDL string WITHOUT a SparkSession
-    (construction happens at import time, before any session exists):
-    split on commas outside parens/angle brackets, take each field's
-    first token."""
-    names: list[str] = []
+def ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """Top-level ``(name, type)`` fields of a DDL string WITHOUT a
+    SparkSession (construction happens at import time, before any session
+    exists): split on commas outside parens/angle brackets, then each
+    field at its first whitespace."""
+    fields: list[tuple[str, str]] = []
     depth, tok = 0, []
     for ch in ddl + ",":
         if ch in "(<":
@@ -160,10 +160,11 @@ def _ddl_names(ddl: str) -> list[str]:
             part = "".join(tok).strip()
             tok = []
             if part:
-                names.append(part.split()[0].strip("`"))
+                name, tname = part.split(None, 1)
+                fields.append((name.strip("`"), tname))
         else:
             tok.append(ch)
-    return names
+    return fields
 
 
 @dataclass(frozen=True)
@@ -183,7 +184,7 @@ class DimSpec:
     def __post_init__(self):
         if not self.name:
             object.__setattr__(self, "name", self.fact_fk)
-        fields = set(_ddl_names(self.ddl))
+        fields = {n for n, _ in ddl_fields(self.ddl)}
         missing = ({self.key, *self.payload} | {"op", "lsn"}) - fields
         if missing:
             raise ValueError(
@@ -323,7 +324,7 @@ class JoinViewSpec:
             )
         if not self.fact_ddl:
             raise ValueError("fact_ddl is required")
-        fact_fields = set(_ddl_names(self.fact_ddl))
+        fact_fields = {n for n, _ in ddl_fields(self.fact_ddl)}
         missing_f = ({self.fact_key, *self.fact_payload} | {"op", "lsn"}) - \
             fact_fields
         if missing_f:

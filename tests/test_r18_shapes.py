@@ -7,10 +7,6 @@
   ``n_sh`` column (absent, or NULL after a mixed-epoch read) must still
   report exactly the same matches (the r17 ADVICE medium item: the old
   bucket-sourced prune+sizes silently dropped all legacy candidates).
-- ``ngram_jaccard_pairs(prefix_filter=True)``: the prefix-filtered
-  formulation must produce the IDENTICAL pair set as the posting-self-join
-  formulation — including hot-shingle (max_df) semantics, the doc-in-doc
-  size-ratio negative, and borderline-threshold pairs.
 - shared arrangement epochs (``join_ivm``): the fact delta is written once
   to the shared ``fact_delta`` store; per-dim arrangement dirs hold only
   the compacted base + manifest, and sweeping respects the MINIMUM
@@ -30,15 +26,10 @@ from postgresql_cdc_spark.operators.dedup import (
     LshIndex,
     build_lsh_index,
     minhash_lsh_incremental,
-    ngram_jaccard_pairs,
 )
 
 TEXT = ("the quick brown fox jumps over the lazy dog while seven wizards "
         "brew strong potions beneath the ancient oak tree at midnight")
-
-
-def _key(r):
-    return tuple(r)
 
 
 def test_incremental_probe_matches_direct_path(spark):
@@ -117,61 +108,6 @@ def test_null_n_sh_bucket_rows_keep_their_candidates(spark, tmp_path):
     ]
     spark.catalog.clearCache()
     assert got == [(101, 1)]
-
-
-def test_prefix_filter_pair_set_identical(spark):
-    """Posting-join vs prefix-filter formulations over a corpus exercising
-    every branch: a true near-dup pair, a borderline pair, a doc-in-doc
-    size-ratio negative, a hot shingle crossing max_df, and a disjoint doc."""
-    long_doc = " ".join([TEXT] + [f"filler{i} pad{i} extra{i}"
-                                  for i in range(40)])
-    hot = " ".join(["common boiler plate"] * 3)  # one shingle, many docs
-    rows = [
-        (1, TEXT),
-        (2, TEXT + " coda words"),               # near-dup of 1
-        (3, long_doc),                           # contains 1, ratio-pruned
-        (4, "totally different text about spark shuffles and parquet"),
-    ] + [(10 + i, hot + f" unique{i} tail{i} words{i}") for i in range(8)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    base = sorted(
-        _key(r) for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.5, max_df=5
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    pref = sorted(
-        _key(r) for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.5, max_df=5, prefix_filter=True
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    assert pref == base
-    assert any(a == 1 and b == 2 for a, b, _ in base)  # the true pair found
-    assert not any(a == 1 and b == 3 for a, b, _ in base)  # ratio negative
-
-
-def test_prefix_filter_borderline_threshold_pair_survives(spark):
-    """A pair whose exact Jaccard lands exactly ON the threshold after
-    round(.,6) must survive the prefix filter's candidate generation."""
-    toks_a = [f"w{i}" for i in range(12)]
-    # 10 shared trigrams of 10 shingles each side => J = 10/(10+10-10)? build
-    # simpler: identical docs + one tail change so J is high but < 1
-    a = " ".join(toks_a)
-    b = " ".join(toks_a[:-1] + ["zz"])
-    df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-    base = sorted(
-        _key(r) for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.5
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    pref = sorted(
-        _key(r) for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.5, prefix_filter=True
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    assert pref == base
 
 
 def test_shared_fact_delta_store_layout(spark, tmp_path):

@@ -164,6 +164,51 @@ def dtype_mismatches(sdf, otypes) -> list[str]:
     return out
 
 
+def oracle_problems(sdf, srows: list[tuple], con,
+                    sql: str) -> tuple[list[str], list[tuple[str, str]]]:
+    """Compare a query's collected Spark rows with its DuckDB oracle: row
+    count, column names, canonical dtypes, then the value hash. Returns
+    the problems (none = PASS) and, on a value mismatch, the differing
+    canonical (spark, oracle) row pairs. A DuckDB error propagates."""
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    # Arrow-fetch parity: fetched via arrow/pandas, HUGEINT / DECIMAL columns
+    # (e.g. SUM over BIGINT promotes to HUGEINT) render as float/Decimal and
+    # hash-mismatch Spark's int64 even when fetchall() shows identical
+    # Python ints. Make that failure class visible locally via the arrow
+    # schema. LIMIT 0 wrapper: schema only, never re-executes the query.
+    otypes = con.execute(
+        f"SELECT * FROM ({sql}) LIMIT 0"
+    ).fetch_arrow_table().schema
+    bad = [f"{f.name}:{f.type}" for f in otypes if _has_decimal(f.type)]
+
+    scols = sdf.columns
+    problems = []
+    if bad:
+        problems.append(
+            "oracle type leak (HUGEINT/DECIMAL renders as float via the "
+            f"arrow fetch): {', '.join(bad)} — CAST the output "
+            "column to BIGINT/DOUBLE in the oracle SQL"
+        )
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"schema spark={sorted(scols)} oracle={sorted(ocols)}")
+    else:
+        dt_bad = dtype_mismatches(sdf, otypes)
+        if dt_bad:
+            problems.append("dtype drift: " + "; ".join(dt_bad))
+    diffs = []
+    if not problems:
+        sh, sl = table_fingerprint(scols, srows)
+        oh, ol = table_fingerprint(ocols, orows)
+        if sh != oh:
+            problems.append(f"valuehash spark={sh} oracle={oh}")
+            diffs = [(a, b) for a, b in zip(sl, ol) if a != b]
+    return problems, diffs
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -174,14 +219,6 @@ def main() -> int:
         action="store_true",
         help="use a vanilla SparkSession (no repo confs), mimicking the "
         "driver's harness — queries must self-provision any conf they need",
-    )
-    ap.add_argument(
-        "--changed",
-        action="store_true",
-        help="gate only the current diff: queries whose live source_hash "
-        "differs from the committed QUERIES.md inventory, queries absent "
-        "from the inventory (brand new), and active re-verification pins — "
-        "seconds instead of the ~25 min full-registry pass",
     )
     args = ap.parse_args()
 
@@ -211,21 +248,6 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
-    if args.changed:
-        import postgresql_cdc_spark.plans as plans
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        recorded = plans._recorded_hashes(root)
-        sel = {
-            n
-            for n, q in plans.QUERIES.items()
-            if recorded.get(n) is None  # new since last inventory
-            or recorded[n] != plans.source_hash(q)  # edited since
-        }
-        sel |= set(plans._PIN_UNTIL_STAMPED_AFTER)  # conservative: incl. inert
-        print(f"--changed: {len(sel)} of {len(queries)} queries selected: "
-              f"{', '.join(sorted(sel)) or '(none)'}")
-        only = sel if only is None else (only & sel)
 
     n_pass = n_fail = n_rows_only = 0
     for name, fn in queries.items():
@@ -235,7 +257,6 @@ def main() -> int:
         try:
             sdf = fn(spark, args.sf)
             srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
@@ -256,54 +277,14 @@ def main() -> int:
             n_rows_only += 1
             continue
         try:
-            cur = con.execute(sql)
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            # Driver parity: the driver fetches the oracle via arrow/pandas,
-            # where HUGEINT / DECIMAL columns (e.g. SUM over BIGINT promotes
-            # to HUGEINT) render as float/Decimal and hash-mismatch Spark's
-            # int64 even when fetchall() shows identical Python ints. Make
-            # that failure class visible locally via the arrow schema.
-            # LIMIT 0 wrapper: schema only, never re-executes the query.
-            otypes = con.execute(
-                f"SELECT * FROM ({sql}) LIMIT 0"
-            ).fetch_arrow_table().schema
-            bad = [
-                f"{f.name}:{f.type}"
-                for f in otypes
-                if _has_decimal(f.type)
-            ]
+            problems, diffs = oracle_problems(sdf, srows, con, sql)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
             n_fail += 1
             continue
-
-        problems = []
-        if bad:
-            problems.append(
-                "oracle type leak (HUGEINT/DECIMAL renders as float via the "
-                f"driver's arrow fetch): {', '.join(bad)} — CAST the output "
-                "column to BIGINT/DOUBLE in the oracle SQL"
-            )
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"schema spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            dt_bad = dtype_mismatches(sdf, otypes)
-            if dt_bad:
-                problems.append("dtype drift: " + "; ".join(dt_bad))
-        if not problems:
-            sh, sl = table_fingerprint(scols, srows)
-            oh, ol = table_fingerprint(ocols, orows)
-            if sh != oh:
-                problems.append(f"valuehash spark={sh} oracle={oh}")
-                shown = 0
-                for a, b in zip(sl, ol):
-                    if a != b and shown < args.show_diff:
-                        print(f"    spark : {a[:220]}")
-                        print(f"    oracle: {b[:220]}")
-                        shown += 1
+        for a, b in diffs[:args.show_diff]:
+            print(f"    spark : {a[:220]}")
+            print(f"    oracle: {b[:220]}")
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}  ({time.time()-t0:.1f}s)")
             n_fail += 1
