@@ -200,7 +200,7 @@ def main() -> int:
     # store trains offline and ships (centroids, codebook) to queries. The
     # registry entry still runs train+serve end-to-end for correctness.
     try:
-        from postgresql_cdc_spark.plans.extensions21 import (
+        from postgresql_cdc_spark.plans.retrieval import (
             _ivfpq_topk,
             ivfpq_train,
         )

@@ -549,7 +549,7 @@ def train_centroids_kmeans(
     centroids as driver-side ``[[int]]`` (cell = list index).
 
     Every step is exact integer arithmetic, so any engine replays it
-    bit-for-bit (the DuckDB oracle in plans/extensions3.py does):
+    bit-for-bit (the DuckDB oracle ``plans.common.kmeans_ctes`` does):
 
     - seed     = quantized vectors of the ``n_centroids`` lowest ids
       (TakeOrdered, no full sort);

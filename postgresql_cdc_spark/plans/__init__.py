@@ -13,40 +13,15 @@ from __future__ import annotations
 from postgresql_cdc_spark.plans.registry import QUERIES, Query, register
 
 # Importing the modules populates QUERIES; registry order is import order.
-from postgresql_cdc_spark.plans import extensions  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions2  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions3  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions4  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions5  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions6  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions7  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions8  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions9  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions10  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions11  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions12  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions13  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions14  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions15  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions16  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions17  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions18  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions19  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions20  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions21  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions22  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions23  # noqa: E402,F401
-from postgresql_cdc_spark.plans import extensions24  # noqa: E402,F401
-from postgresql_cdc_spark.plans import cdc  # noqa: E402,F401
-from postgresql_cdc_spark.plans import streaming_gate  # noqa: E402,F401
-from postgresql_cdc_spark.plans import sources_io  # noqa: E402,F401
-from postgresql_cdc_spark.plans import events_ext  # noqa: E402,F401
-from postgresql_cdc_spark.plans import events_funnels  # noqa: E402,F401
-from postgresql_cdc_spark.plans import relational4  # noqa: E402,F401
-from postgresql_cdc_spark.plans import scale_patterns  # noqa: E402,F401
 from postgresql_cdc_spark.plans import relational  # noqa: E402,F401
-from postgresql_cdc_spark.plans import relational2  # noqa: E402,F401
-from postgresql_cdc_spark.plans import relational3  # noqa: E402,F401
+from postgresql_cdc_spark.plans import cdc  # noqa: E402,F401
+from postgresql_cdc_spark.plans import events  # noqa: E402,F401
+from postgresql_cdc_spark.plans import analytics  # noqa: E402,F401
+from postgresql_cdc_spark.plans import text  # noqa: E402,F401
+from postgresql_cdc_spark.plans import dedup  # noqa: E402,F401
+from postgresql_cdc_spark.plans import retrieval  # noqa: E402,F401
+from postgresql_cdc_spark.plans import multimodal  # noqa: E402,F401
+from postgresql_cdc_spark.plans import streaming_gate  # noqa: E402,F401
 
 
 __all__ = ["QUERIES", "Query", "register"]

@@ -3,8 +3,9 @@ PG text-format type layer (SURVEY.md §2.1 S7-S21).
 
 Every query here replays the deterministic synthetic change log built by
 ``sources.changelog.synthesize_changelog_lineitem`` (pure arithmetic over the
-lineitem fixture), so each has an exact ANSI-SQL oracle DuckDB can compute
-directly from the base table — the oracle never needs to see envelope rows.
+lineitem fixture; shared per session through :func:`_changelog`), so each has
+an exact ANSI-SQL oracle DuckDB can compute directly from the base table —
+the oracle never needs to see envelope rows.
 
 Reference parity exercised:
 
@@ -17,6 +18,8 @@ Reference parity exercised:
   (`wal/TableColumn.java:15-53`) incl. the PG text-bool quirk
 - PG array-literal parsers, numeric + quoted-string grammar
   (`PgArrayUtil.java:9-204`)
+- the warehouse patterns a CDC consumer builds on the changelog: maintained
+  aggregates, snapshot-derived changelogs, log compaction
 """
 
 from __future__ import annotations
@@ -36,18 +39,16 @@ from postgresql_cdc_spark.functions.pg_types import (
     typed_view,
 )
 from postgresql_cdc_spark.operators.materialize import materialize
+from postgresql_cdc_spark.plans.common import T, roundtrip_dir
 from postgresql_cdc_spark.plans.registry import register
 from postgresql_cdc_spark.sources.changelog import (
     CHANGELOG_ORACLE as _CHANGELOG_ORACLE,
     LATEST_IMAGE_CTE,
     LINEITEM_COLUMNS,
     LINEITEM_STATE_ORACLE,
+    LINEITEM_STATE_ORACLE as _LI_STATE_ORACLE,
     synthesize_changelog_lineitem,
 )
-
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # The synthesized changelog is deterministic per sf_dir; within one process
@@ -619,3 +620,188 @@ def cdc_image_sparsity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("fill_permille"),
     )
+
+
+# --- incremental view maintenance from the changelog -------------------------
+
+@register(
+    "cdc_incremental_agg_maintenance",
+    f"""
+    SELECT l_returnflag,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
+    FROM ({LINEITEM_STATE_ORACLE})
+    GROUP BY l_returnflag
+    """,
+    doc="Incremental view maintenance (IVM): SUM/COUNT per l_returnflag "
+        "maintained purely from I/U/D retract deltas — each event emits "
+        "(-old image, +new image) against the grouping column WITHOUT ever "
+        "materializing row state, the way a streaming CDC consumer keeps an "
+        "aggregate fresh at a fraction of recompute cost. The prior image "
+        "per key comes from ONE window (running last() fill for the two "
+        "needed columns + lag — far lighter than full materialization, and "
+        "TOAST-sparse UPDATE images inherit correctly because the fill "
+        "skips absent entries). The oracle recomputes the aggregate from "
+        "the fully-replayed final state: equality IS the IVM correctness "
+        "proof. Shape: one key-partitioned window + one explode + one hash "
+        "agg; at 100 TB the window shuffle is the same key partitioning "
+        "every materialization query uses, and the final agg is "
+        "map-side-combinable to |groups| rows.",
+)
+def cdc_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from postgresql_cdc_spark.operators.ivm import incremental_group_agg
+
+    log = _changelog(spark, sf_dir)
+    out = incremental_group_agg(
+        log,
+        keys=["l_orderkey", "l_linenumber"],
+        group_col="l_returnflag",
+        sum_col="l_quantity",
+    )
+    return out.select(
+        "l_returnflag", "n_rows", F.col("total").alias("total_qty")
+    )
+
+
+# --- snapshot diff -> changelog (the inverse of materialize) -----------------
+
+# Planted new snapshot of customer: every 17th row dropped (DELETE), every
+# 13th surviving row gets +10 acctbal (UPDATE), every 19th row re-appears
+# cloned at custkey+900000 (INSERT). Both engines construct the identical
+# new side, so the diff has known true rows of every op kind.
+_DIFF_NEW = """
+    SELECT c_custkey, c_name, c_nationkey,
+           CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 10
+                ELSE c_acctbal END AS c_acctbal,
+           c_mktsegment
+    FROM customer WHERE c_custkey % 17 <> 0
+    UNION ALL
+    SELECT c_custkey + 900000, c_name || '_new', c_nationkey, c_acctbal,
+           c_mktsegment
+    FROM customer WHERE c_custkey % 19 = 0
+"""
+
+_DIFF_COLS = ("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+
+
+@register(
+    "cdc_snapshot_diff",
+    f"""
+    WITH new_snap AS ({_DIFF_NEW}),
+    j AS (SELECT coalesce(o.c_custkey, n.c_custkey) AS c_custkey,
+                 o.c_custkey IS NULL AS is_i, n.c_custkey IS NULL AS is_d,
+                 {', '.join(
+                     f"(o.{c} IS DISTINCT FROM n.{c}) AS ch_{c}"
+                     for c in _DIFF_COLS
+                 )}
+          FROM customer o FULL OUTER JOIN new_snap n
+            ON o.c_custkey = n.c_custkey)
+    SELECT CASE WHEN is_i THEN 'I' WHEN is_d THEN 'D' ELSE 'U' END AS op,
+           c_custkey,
+           CASE WHEN is_i OR is_d THEN ''
+                ELSE concat_ws(',', {', '.join(
+                    f"CASE WHEN ch_{c} THEN '{c}' END" for c in _DIFF_COLS
+                )}) END AS changed_cols
+    FROM j
+    WHERE is_i OR is_d OR {' OR '.join(f'ch_{c}' for c in _DIFF_COLS)}
+    """,
+    doc="Snapshot diff -> changelog: the INVERSE of materialize — given two "
+        "table snapshots, emit the minimal I/U/D changelog between them "
+        "(the bootstrap every CDC deployment needs when a source has no "
+        "WAL retention, and the audit that verifies a replica). One "
+        "null-safe FULL OUTER JOIN on the key classifies each row; UPDATE "
+        "rows carry the exact changed-column list via IS DISTINCT FROM "
+        "(null-safe on both engines). Shape: a single co-partitioned "
+        "shuffle join on the key — the 100 TB plan is two sorted scans + "
+        "merge, identical to the backup-verification jobs warehouses "
+        "already run; unchanged rows are filtered before any projection "
+        "fan-out.",
+)
+def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    old = T(spark, sf_dir, "customer")
+    keep = old.where(F.col("c_custkey") % 17 != 0).select(
+        "c_custkey", "c_name", "c_nationkey",
+        F.when(F.col("c_custkey") % 13 == 0, F.col("c_acctbal") + 10)
+        .otherwise(F.col("c_acctbal")).alias("c_acctbal"),
+        "c_mktsegment",
+    )
+    ins = old.where(F.col("c_custkey") % 19 == 0).select(
+        (F.col("c_custkey") + 900000).alias("c_custkey"),
+        F.concat(F.col("c_name"), F.lit("_new")).alias("c_name"),
+        "c_nationkey", "c_acctbal", "c_mktsegment",
+    )
+    new = keep.unionByName(ins)
+
+    o = old.alias("o")
+    n = new.alias("n")
+    j = o.join(n, F.col("o.c_custkey") == F.col("n.c_custkey"), "full_outer")
+    is_i = F.col("o.c_custkey").isNull()
+    is_d = F.col("n.c_custkey").isNull()
+    ch = {
+        c: ~F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}")) for c in _DIFF_COLS
+    }
+    any_ch = None
+    for c in _DIFF_COLS:
+        any_ch = ch[c] if any_ch is None else (any_ch | ch[c])
+    return (
+        j.where(is_i | is_d | any_ch)
+        .select(
+            F.when(is_i, "I").when(is_d, "D").otherwise("U").alias("op"),
+            F.coalesce(F.col("o.c_custkey"), F.col("n.c_custkey"))
+            .alias("c_custkey"),
+            F.when(is_i | is_d, "").otherwise(
+                F.concat_ws(",", *[
+                    F.when(ch[c], c) for c in _DIFF_COLS
+                ])
+            ).alias("changed_cols"),
+        )
+    )
+
+
+# --- changelog compaction round-trip -----------------------------------------
+
+@register(
+    "cdc_changelog_compaction",
+    f"""
+    SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
+           CAST(l_partkey AS BIGINT) AS l_partkey,
+           CAST(l_suppkey AS BIGINT) AS l_suppkey,
+           CAST(l_linenumber AS INT) AS l_linenumber,
+           CAST(l_quantity AS DOUBLE) AS l_quantity,
+           CAST(l_extendedprice AS DOUBLE) AS l_extendedprice,
+           CAST(l_discount AS DOUBLE) AS l_discount,
+           CAST(l_tax AS DOUBLE) AS l_tax,
+           l_returnflag, l_linestatus
+    FROM ({_LI_STATE_ORACLE})
+    """,
+    doc="Changelog compaction round-trip — the maintenance composition a "
+        "long-lived CDC lake runs: the I/U/D changelog is first written "
+        "DELIBERATELY fragmented (repartition(64) => 64 tiny map-typed "
+        "parquet files, the shape a fine-grained streaming sink leaves), "
+        "then operators/layout.compact rewrites it via the SORTED path "
+        "(repartitionByRange on lsn + sortWithinPartitions — one shuffle "
+        "that also re-clusters so min/max file stats prune LSN-range "
+        "replays afterwards), and materialize(merge_sparse) runs over the "
+        "COMPACTED copy. The oracle is cdc_materialize_state's state SQL "
+        "verbatim: compaction must be invisible to replay — identical "
+        "current state, TOAST-sparse merge included, row order and file "
+        "layout notwithstanding. Complements layout_compaction_roundtrip "
+        "(coalesce path, plain table) by gating the shuffle path on the "
+        "engine's own changelog format.",
+)
+def cdc_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from postgresql_cdc_spark.operators.layout import compact
+
+    log = _changelog(spark, sf_dir)
+    frag = roundtrip_dir(spark, sf_dir, "clog_frag")
+    out = roundtrip_dir(spark, sf_dir, "clog_compact")
+    log.repartition(64).write.mode("overwrite").parquet(frag)
+    compact(spark, frag, out, target_file_bytes=64 * 1024 * 1024,
+            sort_by=["lsn"])
+    state = materialize(
+        spark.read.parquet(out),
+        keys=["l_orderkey", "l_linenumber"],
+        merge_sparse=True,
+        columns=list(LINEITEM_COLUMNS),
+    )
+    return typed_view(state, LINEITEM_COLUMNS, keep=())

@@ -24,6 +24,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: 48 GiB, capped at half the memory this process
+    may use — physical RAM, or the cgroup limit when that is lower — so a
+    small box never gets a heap it cannot back."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():  # cgroup v2 writes "max" when unlimited
+            limit = min(limit, int(v))
+    return f"{min(48 * 1024, limit // 2 // (1 << 20))}m"
+
+
 def get_spark(app_name: str = "postgresql-cdc-spark", extra_conf: dict | None = None) -> SparkSession:
     cpus = default_parallelism()
     builder = (
@@ -37,13 +54,14 @@ def get_spark(app_name: str = "postgresql-cdc-spark", extra_conf: dict | None = 
         .config("spark.sql.session.timeZone", "UTC")
         # local mode runs every executor thread inside the driver JVM: with 32
         # concurrent tasks shuffling map-typed rows, an 8g heap GC-thrashes
-        # (observed 5-10x slowdowns late in a session). The harness box has
-        # 128 GiB; size the heap like the executors it is standing in for.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # (observed 5-10x slowdowns late in a session). Size the heap like
+        # the executors it is standing in for, within what the box can back.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # events.parquet carries INT64 TIMESTAMP(NANOS) which Spark has no
-        # native type for; read as long and convert (see plans.relational.EV)
+        # native type for; read as long and convert (see plans.common.EV)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # An engine process serves ~200 registered query shapes; the default
         # 100-entry generated-class cache thrashes when many queries share a

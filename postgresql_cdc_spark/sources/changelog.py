@@ -91,19 +91,6 @@ def text_map(*cols: str, exprs: dict | None = None) -> F.Column:
     return F.create_map(*pairs)
 
 
-def _envelope(df: DataFrame, op: str, lsn: F.Column, txn: F.Column,
-              payload: F.Column) -> DataFrame:
-    return df.select(
-        F.lit(op).alias("op"),
-        F.lit("public").alias("schema"),
-        F.lit("lineitem").alias("table"),
-        F.lit(16384).alias("relation_id"),
-        lsn.cast("long").alias("lsn"),
-        txn.cast("long").alias("txn_id"),
-        payload.alias("columns"),
-    )
-
-
 def synthesize_changelog_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic I/U/D change log over the lineitem fixture (see module
     docstring for the rules).

@@ -43,11 +43,7 @@ from __future__ import annotations
 import os
 from typing import List, Optional
 
-from postgresql_cdc_spark.streaming.source import (
-    _fsync_dir,
-    _load_sidecar,
-    _write_sidecar,
-)
+from postgresql_cdc_spark.streaming.source import _load_sidecar, _write_sidecar
 
 
 def compact_wal_archive(
@@ -56,6 +52,8 @@ def compact_wal_archive(
     """Merge adjacent indexed chunks into runs of up to
     ``target_chunk_bytes``; returns ``{merged_runs, chunks_before,
     chunks_after, merged_bytes}``."""
+    from postgresql_cdc_spark.streaming.epoch_maintenance import _fsync_dir
+
     chunks = sorted(n for n in os.listdir(path) if n.endswith(".wal"))
     before = len(chunks)
     runs: List[List[str]] = []

@@ -190,29 +190,6 @@ def _write_sidecar(chunk_fp: str, meta: dict) -> None:
             pass
 
 
-def _fsync_dir(path: str) -> None:
-    """fsync a DIRECTORY so renames/unlinks inside it survive power loss.
-
-    Maintenance passes (prune, compaction) use this after their rename/
-    unlink batches: without it a power cut can resurrect an unlinked chunk
-    or lose a renamed snapshot's directory entry. Replay stays CORRECT
-    either way — the head-snapshot application and the scan's
-    LSN-monotonicity guard drop resurrected duplicates — so this closes a
-    tidiness window, not a correctness one. Best-effort: filesystems that
-    refuse O_DIRECTORY fsync (some network mounts) degrade to the
-    pre-fsync behavior."""
-    try:
-        fd = os.open(path, os.O_RDONLY | getattr(os, "O_DIRECTORY", 0))
-    except OSError:
-        return
-    try:
-        os.fsync(fd)
-    except OSError:
-        pass
-    finally:
-        os.close(fd)
-
-
 def _read_chunk_bytes(fp: str) -> bytes:
     """Single chokepoint for chunk I/O — tests spy on it to prove indexed
     scans never touch the bytes of chunks behind the cursor."""
@@ -315,6 +292,10 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
         "txn_id": int(last_sidecar["txn_id"]),
         "registry": merged_registry,
     }
+    # imported here, not at module level, so that importing this module
+    # (executors do, to read the pgcdc source) does not pull it in
+    from postgresql_cdc_spark.streaming.epoch_maintenance import _fsync_dir
+
     tmp = os.path.join(path, _BASE_SNAPSHOT + ".tmp")
     with open(tmp, "w") as f:
         json.dump(snap, f)
@@ -708,29 +689,6 @@ class PgCdcDataSource(DataSource):
         )
 
 
-def live_replication_frames(dsn: str, slot: str, publication: str):
-    """Live-socket transport: slot + publication DDL, replication-mode
-    connection, poll loop with reconnect/backoff — see
-    ``streaming.replication`` (unit-tested against a fake psycopg stream;
-    the real path needs psycopg2 + a PostgreSQL with wal_level=logical,
-    neither present in this container).
-
-    Yields ``(lsn, payload)`` frames — the same shape ``read_wal_frames``
-    produces, so decode and offset logic are transport-agnostic; the consumer
-    acks via ``transport.ack(flush_lsn)`` from ``commit()`` — the reference's
-    setFlushedLSN path (`CdcEngine.java:132-137`).
-    """
-    from postgresql_cdc_spark.streaming.replication import (
-        LiveReplicationTransport,
-        ReplicationConfig,
-        psycopg2_connection_factory,
-    )
-
-    cfg = ReplicationConfig(dsn=dsn, slot=slot, publication=publication)
-    transport = LiveReplicationTransport(psycopg2_connection_factory(cfg), cfg)
-    return transport.frames()
-
-
 def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
                   max_frames: Optional[int] = None) -> int:
     """Drain a replication transport into the WAL-archive format the pgcdc
@@ -750,6 +708,8 @@ def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
     tests / drain-and-stop usage; a live deployment omits it and runs
     forever).
     """
+    from postgresql_cdc_spark.streaming.epoch_maintenance import _fsync_dir
+
     os.makedirs(path, exist_ok=True)
     # max(existing)+1, not len(existing): with a gap in the numbering (manual
     # cleanup, a differently-numbered pre-existing archive) len() could reuse a
@@ -774,6 +734,7 @@ def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
         fp = write_wal_archive(path, buf, chunk=f"{chunk_idx:06d}.wal")
         with open(fp, "rb") as f:  # durability barrier before the ack
             os.fsync(f.fileno())
+        _fsync_dir(path)  # ... and the chunk's directory entry with it
         transport.ack(buf[-1][0])
         chunk_idx += 1
         buf = []

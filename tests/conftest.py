@@ -13,17 +13,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def pytest_collection_modifyitems(config, items):
-    """Tier the oracle-parity sweep (r18, VERDICT item 1b): the
+    """Tier the oracle-parity sweep (r18, VERDICT item 1b): the non-IVM
     ``cdc_stream_*`` registry rows each drive a full multi-trigger
     foreachBatch stream (5-35 s apiece, ~8 min of the measured 40-min full
     suite) and are exactly the gates the DRIVER's own oracle re-verifies
     every round — so they run in the slow tier, keeping the default tier
     inside the driver's verify budget. Batch-query oracle rows (sub-second
-    each) stay in the default tier."""
+    each) and the join-IVM gates (``cdc_stream_ivm_*``, 10-40 s each)
+    stay in the default tier."""
     import pytest as _pytest
 
+    row = "test_query_runs_and_aliases_match_oracle["
     for item in items:
-        if "test_query_runs_and_aliases_match_oracle[cdc_stream_" in item.nodeid:
+        if (row + "cdc_stream_" in item.nodeid
+                and row + "cdc_stream_ivm_" not in item.nodeid):
             item.add_marker(_pytest.mark.slow)
 
 

@@ -5,7 +5,7 @@ avro core jars), and this container has no network to fetch
 ``org.apache.spark:spark-avro`` — so here the test SKIPS with the probe
 error. On a cluster with the package it runs the same write → schema-explicit
 read → aggregate pattern as the CSV/JSON/ORC/text roundtrips in
-``plans/sources_io.py`` and completes the file-format matrix.
+``plans/relational.py`` (``source_*``) and completes the file-format matrix.
 """
 
 from __future__ import annotations

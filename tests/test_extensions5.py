@@ -93,9 +93,9 @@ class TestRandomProjection:
         v = [i / 1000.0 for i in range(64)]  # exact millis
         df = spark.createDataFrame([(1, v), (2, [2 * x for x in v])],
                                    ["vec_id", "embedding"])
-        import postgresql_cdc_spark.plans.extensions5 as e5
+        from postgresql_cdc_spark.plans import retrieval
 
-        w = hyperplane_weights("rp", e5._RP_PLANES, e5._RP_DIM)
+        w = hyperplane_weights("rp", retrieval._RP_PLANES, retrieval._RP_DIM)
         q = [int(x * 1000) for x in v]
         expect = [
             sum(int(wi) * qi for wi, qi in zip(plane, q)) for plane in w
@@ -111,7 +111,7 @@ class TestRandomProjection:
         p = b.select(
             "vec_id",
             F.expr(
-                f"transform({e5._rp_wmat_spark()}, wp -> "
+                f"transform({retrieval._rp_wmat_spark()}, wp -> "
                 "aggregate(zip_with(q, wp, (x, y) -> x * y), "
                 "0L, (acc, x) -> acc + x))"
             ).alias("proj"),
@@ -225,7 +225,7 @@ class TestFuzzyLinkage:
 
         from pyspark.sql import functions as F
 
-        from postgresql_cdc_spark.plans.extensions6 import sym_del_keys
+        from postgresql_cdc_spark.plans.dedup import sym_del_keys
 
         masters = [(1, "abcd"), (2, "zzzz"), (3, "hello")]
         dirty = [

@@ -1,6 +1,6 @@
 """Property tests for the two subtlest extension-query kernels.
 
-1. The floored-running-balance identity (plans/extensions11.py,
+1. The floored-running-balance identity (plans/events.py,
    events_floored_running_balance): with a floor-at-zero clamp,
    ``balance_i = prefix_i - min(0, running_min(prefix_i))`` — two ordinary
    cumulative windows replace the sequential state machine. The oracle gate
@@ -65,7 +65,7 @@ def test_clamp_identity_matches_sequential_fold(deltas):
 )
 @settings(max_examples=200, deadline=None)
 def test_clamp_identity_floor_hits(deltas):
-    # a floor HIT (extensions11's n_floor_hits) is a debit row where the
+    # a floor HIT (the query's n_floor_hits) is a debit row where the
     # clamped balance lands exactly on zero; cross-check the window-side
     # predicate (prefix == waterline and prefix <= 0 and delta < 0)
     # against the sequential definition (delta < 0 and new balance == 0).

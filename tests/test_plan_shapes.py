@@ -95,10 +95,10 @@ def _plan(spark, name: str) -> str:
 
 def _is_streaming_gate(q) -> bool:
     # Module match catches plans/streaming_gate.py; the name prefix catches
-    # streaming gates defined elsewhere (cdc_stream_incremental_dedup lives
-    # in extensions2 next to its batch sibling). Building ANY of them runs a
-    # real StreamingQuery — minutes of wall per sweep — and the returned
-    # batch DataFrame is just a sink read, so its "plan" is vacuous here.
+    # any cdc_stream_* gate even if it moves out of that module. Building
+    # ANY of them runs a real StreamingQuery — minutes of wall per sweep —
+    # and the returned batch DataFrame is just a sink read, so its "plan" is
+    # vacuous here.
     if q.name.startswith("cdc_stream_"):
         return True
     fn = q.spark
@@ -400,36 +400,23 @@ BROADCAST_HINT_SITES = {
     "operators/multimodal.py": {"hot"},                      # (d)
     "operators/seams.py": {"rhs"},                           # (e) super-bucket rollup
     "operators/similarity.py": {"centroids", "cents", "probes", "q", "wide"},
-    "plans/extensions10.py": {"b", "carry", "ladder", "max_doc", "nn",
-                              "np_", "spans"},
-    "plans/extensions11.py": {"tot", "totals"},
-    "plans/extensions12.py": {"at", "ct", "mx", "rt", "tot"},
-    "plans/extensions13.py": {"crossing", "tot", "vocab"},   # vocab: top-k LIMIT list
-    "plans/extensions15.py": {"med"},
-    "plans/extensions17.py": {"r"},
-    "plans/extensions19.py": {"n_nulls", "nullsafe", "plain", "t"},
-    "plans/extensions2.py": {"ca", "cb"},                    # (e) per-source counts
-    "plans/extensions21.py": {"probes", "qv", "short", "totals"},
-    "plans/extensions22.py": {"cents", "dfs", "folded", "probes", "qv",
-                              "st", "vocab"},                # vocab/st/dfs/folded: one-row aggs
-    "plans/extensions23.py": {"cents", "nq", "probes"},
-    "plans/extensions24.py": {"mx", "scan"},                 # (a) one-row aggs
-    "plans/extensions3.py": {"nq", "probes"},
-    "plans/extensions5.py": {"cust", "n", "q", "supp"},
-    "plans/extensions6.py": {"cb", "cust", "e0", "n", "n_found", "n_hit",
-                             "supp", "tri"},                 # e0/tri: one-row counts
-    "plans/extensions7.py": {"bounds", "carry", "f", "kp", "mad", "med",
-                             "nd", "q", "tot"},
-    "plans/extensions8.py": {"base", "bounds", "cand", "carry", "cb", "cust",
-                             "del_c", "del_o", "dim", "lut", "mad", "mau",
-                             "n", "nat", "r", "reg", "supp", "t", "tot"},
-    "plans/extensions9.py": {"bycat", "tot"},
-    "plans/relational.py": {"c", "n", "r"},                  # (b) filtered dims
-    "plans/relational2.py": {"heavy_orders", "small", "thresh"},
-    "plans/relational3.py": {"T", "b", "n", "p", "s"},
-    "plans/relational4.py": {"T", "bad", "mx", "p", "s", "top", "total"},
-    "plans/scale_patterns.py": {"buckets"},                  # (d) sampled bucket list
-    "plans/streaming_gate.py": {"nation"},                   # (b) 25-row dim
+    "plans/analytics.py": {"at", "b", "bounds", "bycat", "carry", "crossing",
+                           "ct", "cust", "del_c", "del_o", "e0", "mx", "n",
+                           "nat", "nn", "np_", "q", "reg", "rt", "spans",
+                           "supp", "t", "tot", "totals", "tri"},  # e0/tri: one-row counts
+    "plans/dedup.py": {"n_found", "n_hit"},                  # (a) one-row counts
+    "plans/events.py": {"base", "bounds", "carry", "mad", "mau", "med", "q",
+                        "tot"},
+    "plans/relational.py": {"T", "b", "bad", "buckets", "c", "cand", "dim",
+                            "heavy_orders", "mx", "n", "n_nulls", "nullsafe",
+                            "p", "plain", "r", "s", "small", "thresh", "top",
+                            "total"},                        # (b) filtered dims, (d) sampled buckets
+    "plans/retrieval.py": {"cb", "dfs", "lut", "nq", "probes", "qv", "short",
+                           "st"},
+    "plans/streaming_gate.py": {"cents", "folded", "mx", "nation", "nq",
+                                "probes", "scan"},           # (b) 25-row dim, (a) one-row aggs
+    "plans/text.py": {"ca", "cb", "dfs", "f", "kp", "ladder", "max_doc", "n",
+                      "nd", "r", "st", "tot", "vocab"},      # vocab: top-k LIMIT list; (e) per-source counts
     # (c)-style bounded probe/delta sides of the join-IVM delta rule.
     # ``dd`` (a dim delta) is <= 2|micro-batch| rows by construction
     # (maxRecordsPerBatch caps the batch); ``keys_local`` (probe_by_keys'

@@ -1,5 +1,5 @@
 """Qualitative pin of the quantizer-refresh gate
-(plans/extensions24.cdc_stream_ivf_quantizer_refresh): the oracle gate
+(plans/streaming_gate.cdc_stream_ivf_quantizer_refresh): the oracle gate
 proves the NUMBERS; this proves the STORY — under injected drift the
 frozen generation-1 quantizer's health degrades and the retrain + swap +
 re-encode recovers it — and that the swap actually swept the old
@@ -33,9 +33,9 @@ class TestQuantizerRefresh:
         # The gate records its state dir in LAST_STATE_DIR — globbing the
         # shared temp root could match a stale dir from an earlier failed
         # or concurrent run (r15 advice).
-        from postgresql_cdc_spark.plans import extensions24
+        from postgresql_cdc_spark.plans import streaming_gate
 
-        state = extensions24.LAST_STATE_DIR
+        state = streaming_gate.LAST_STATE_DIR
         assert state is not None and os.path.isdir(state), state
         quants = sorted(
             n for n in os.listdir(state) if n.startswith("quant_v")

@@ -395,6 +395,62 @@ class TestArchiveRetention:
             n for n in os.listdir(arch) if n.endswith(".wal")
         ) == ["000001.wal", "000002.wal"]  # numbering continued, no reuse
 
+    def test_prune_raises_on_directory_fsync_eio(self, tmp_path,
+                                                 monkeypatch):
+        """EIO from the directory fsync is lost writeback, not a missing
+        capability: prune must raise, never report the chunks gone."""
+        import errno
+        import stat
+
+        from postgresql_cdc_spark.streaming.source import prune_wal_archive
+
+        arch = str(tmp_path / "wal")
+        last = _mk_archive(arch, n_chunks=3, txns_per_chunk=2)
+        WalArchiveStreamReader({"path": arch, "readall": "true"}).latestOffset()
+        real_fsync = os.fsync
+
+        def fsync(fd):
+            if stat.S_ISDIR(os.fstat(fd).st_mode):
+                raise OSError(errno.EIO, "injected EIO")
+            real_fsync(fd)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        with pytest.raises(OSError) as exc:
+            prune_wal_archive(arch, upto_lsn=last)
+        assert exc.value.errno == errno.EIO
+
+    def test_relay_fsyncs_archive_directory_before_ack(self, tmp_path,
+                                                       monkeypatch):
+        """A chunk's directory entry must be durable before the transport
+        is acked, or a power cut can lose an acked chunk."""
+        import stat
+
+        from postgresql_cdc_spark.streaming.source import run_wal_relay
+
+        arch = str(tmp_path / "wal")
+        events = []
+        real_fsync = os.fsync
+
+        def fsync(fd):
+            if stat.S_ISDIR(os.fstat(fd).st_mode):
+                events.append("dir-fsync")
+            real_fsync(fd)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+
+        class _T:
+            def frames(self):
+                yield 1, encode_begin(2, 0, 50)
+                yield 2, encode_commit(2, 2, 0)
+                yield 3, encode_begin(4, 0, 51)
+                yield 4, encode_commit(4, 4, 0)
+
+            def ack(self, lsn):
+                events.append(("ack", lsn))
+
+        assert run_wal_relay(_T(), arch, chunk_frames=2) == 4
+        assert events == ["dir-fsync", ("ack", 2), "dir-fsync", ("ack", 4)]
+
     def test_prune_defaults_to_ack_file(self, tmp_path):
         from postgresql_cdc_spark.streaming.source import prune_wal_archive
 
